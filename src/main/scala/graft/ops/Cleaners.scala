@@ -61,10 +61,13 @@ object Cleaners {
       .when(age.between(36, 50), "36-50")
       .otherwise("+50")
 
-  /** Narrow (dedup-free) pin transform — shared verbatim by the batch
-    * cleaner and the streaming path, which appends its own stateful dedup.
+  /** pin cleaner — `CLEAN:60-74` / `KINESIS:117-132`.
+    * sentinel->NULL, follower_count parse, save_location prefix strip,
+    * rename index->ind, drop `downloaded`, fixed column order, dedup on
+    * `description`. Batch and stream share it: on a streaming frame the
+    * dedup compiles to the stateful StreamingDeduplicate.
     */
-  def pinCleanCore(df: DataFrame): DataFrame =
+  def pinClean(df: DataFrame): DataFrame =
     nullifySentinels(df)
       .withColumn("follower_count", parseFollowerCount(col("follower_count")))
       // the reference strips "Local save in" WITHOUT the trailing space
@@ -77,42 +80,29 @@ object Cleaners {
       .select("ind", "unique_id", "title", "description", "follower_count",
         "poster_name", "tag_list", "is_image_or_video", "image_src",
         "save_location", "category")
-
-  /** pin cleaner — `CLEAN:60-74` / `KINESIS:117-132`.
-    * sentinel->NULL, follower_count parse, save_location prefix strip,
-    * rename index->ind, drop `downloaded`, fixed column order, dedup on
-    * `description`.
-    */
-  def pinClean(df: DataFrame): DataFrame =
-    pinCleanCore(df).dropDuplicates("description")
-
-  /** Narrow geo transform (see [[pinCleanCore]]). */
-  def geoCleanCore(df: DataFrame): DataFrame =
-    df.withColumn("coordinates",
-        array(col("latitude").cast(FloatType), col("longitude").cast(FloatType)))
-      .drop("latitude", "longitude")
-      .withColumn("timestamp", to_timestamp(col("timestamp")))
-      .select("ind", "country", "coordinates", "timestamp")
+      .dropDuplicates("description")
 
   /** geo cleaner — `CLEAN:82-88` / `KINESIS:138-149`.
     * latitude+longitude fused into `coordinates: array<float>`, timestamp
     * parsed, dedup on `ind`.
     */
   def geoClean(df: DataFrame): DataFrame =
-    geoCleanCore(df).dropDuplicates("ind")
-
-  /** Narrow user transform (see [[pinCleanCore]]). */
-  def userCleanCore(df: DataFrame): DataFrame =
-    df.withColumn("user_name",
-        concat(col("first_name"), lit(" "), col("last_name")))
-      .drop("first_name", "last_name")
-      .withColumn("date_joined", to_timestamp(col("date_joined")))
-      .select("ind", "user_name", "age", "date_joined")
+    df.withColumn("coordinates",
+        array(col("latitude").cast(FloatType), col("longitude").cast(FloatType)))
+      .drop("latitude", "longitude")
+      .withColumn("timestamp", to_timestamp(col("timestamp")))
+      .select("ind", "country", "coordinates", "timestamp")
+      .dropDuplicates("ind")
 
   /** user cleaner — `CLEAN:95-101` / `KINESIS:153-163`.
     * first+last name concatenated into `user_name`, originals dropped,
     * date parsed, dedup on `ind`.
     */
   def userClean(df: DataFrame): DataFrame =
-    userCleanCore(df).dropDuplicates("ind")
+    df.withColumn("user_name",
+        concat(col("first_name"), lit(" "), col("last_name")))
+      .drop("first_name", "last_name")
+      .withColumn("date_joined", to_timestamp(col("date_joined")))
+      .select("ind", "user_name", "age", "date_joined")
+      .dropDuplicates("ind")
 }

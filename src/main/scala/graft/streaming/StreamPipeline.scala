@@ -1,9 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.ops.Cleaners
 import graft.schemas.Schemas
@@ -28,11 +30,13 @@ import graft.schemas.Schemas
   * finishes the rename before any read, making the batch applied. The
   * old record-after-overwrite pattern had a window where the table was
   * updated but the ledger was not, double-merging the batch on replay.
-  * Append-shaped sinks (the near-dup gate's two-table append) keep the
-  * external ledger and its documented window.
+  * The external ledger file ([[record]]) is still read, so tables written
+  * before the marker existed keep their replay protection. The near-dup
+  * gate appends instead of overwriting and keeps its own ledger: a
+  * manifest pointer swapped by the same atomic rename
+  * (`StreamPipeline.startNearDupGate`).
   */
 private[graft] object TableSink {
-  import org.apache.hadoop.fs.Path
 
   private def fs(s: SparkSession, path: String) =
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -107,7 +111,7 @@ private[graft] object TableSink {
   def alreadyApplied(s: SparkSession, path: String, batchId: Long): Boolean = {
     recover(s, path)
     // both ledgers consulted: the in-directory marker (atomic commit
-    // sinks) and the legacy external file (append-shaped sinks)
+    // sinks) and the external [[record]] file (pre-marker tables)
     val ids = Seq(
       readId(s, path, new Path(path, MarkerName)),
       readId(s, path, ledger(path))).flatten
@@ -130,9 +134,9 @@ private[graft] object TableSink {
     * previous commit, already carrying its own `_graft_batch` marker.
     * Instead of deleting it, the swap RENAMES it (no data copy) into
     * `path__versions/v<prevId>`, where [[readTableAsOf]] serves it.
-    * Retention is bounded the rotating-gate way: after every commit,
-    * [[vacuumVersions]] keeps the newest `keepVersions` archived
-    * versions and GCs the rest — the overwrite-shaped sinks rewrite
+    * Retention is bounded the windowed near-dup gate's way: after
+    * every commit, [[vacuumVersions]] keeps the newest `keepVersions`
+    * archived versions and GCs the rest — the overwrite-shaped sinks rewrite
     * the FULL table per commit, so unbounded retention would be
     * O(batches × table) storage on exactly the unbounded streams these
     * sinks serve. A live table WITHOUT a marker (created before the
@@ -218,7 +222,7 @@ private[graft] object TableSink {
   /** Retention GC: keep the newest `keepLast` ARCHIVED versions, delete
     * the rest (the live table is never touched). Listing-based and
     * idempotent — a crash mid-vacuum leaves directories the next
-    * vacuum re-deletes, the rotating-gate discipline.
+    * vacuum re-deletes, the near-dup gate's GC discipline.
     */
   def vacuumVersions(s: SparkSession, path: String, keepLast: Int): Unit = {
     val f = fs(s, path)
@@ -247,12 +251,14 @@ private[graft] object TableSink {
   * without touching the pipeline (`deserialize` onward is source-agnostic).
   *
   * Scale notes:
-  *  - All three cleaners are narrow (per-row) except the trailing stateful
-  *    dedup. Faithful mode (`bounded = false`) reproduces the reference's
-  *    unbounded `dropDuplicates` state (`KINESIS:131,145,156`) — a known
-  *    leak at 100 TB/day. `bounded = true` switches to
-  *    `dropDuplicatesWithinWatermark`, which evicts state past the
-  *    watermark: the production configuration (flagged deviation, §7.4).
+  *  - Batch and stream share one cleaner per topic (`Cleaners.pinClean`
+  *    etc.): every step is narrow except the trailing `dropDuplicates`,
+  *    which on a stream compiles to StreamingDeduplicate and keeps the
+  *    reference's unbounded dedup state (`KINESIS:131,145,156`) — every
+  *    key ever seen stays in the state store. A stream that must run
+  *    forever bounds that state by deduplicating within a watermark
+  *    (`dropDuplicatesWithinWatermark`) on its own event-time column
+  *    instead; the pipeline keeps the reference's contract.
   *  - Sinks are parquet append with per-query checkpoints — the same
   *    exactly-once contract as the reference's Delta sinks (`KINESIS:174-192`).
   */
@@ -264,22 +270,9 @@ object StreamPipeline {
       .select(from_json(col("data"), schema).as("data"))
       .select(col("data.*"))
 
-  /** Streaming pin path: deserialize + clean. `dropDuplicates` on a stream
-    * compiles to StreamingDeduplicate (stateful, exactly the reference's
-    * operator); bounded mode adds a watermark and evicts old state.
-    */
-  def pinStream(raw: DataFrame, bounded: Boolean = false): DataFrame = {
-    val cleaned = deserialize(raw, Schemas.pinRaw)
-      .transform(Cleaners.pinCleanCore)
-    // no event-time column on pin; bounded mode uses processing-time ingest
-    if (bounded)
-      cleaned
-        .withColumn("ingest_ts", current_timestamp())
-        .withWatermark("ingest_ts", "1 hour")
-        .dropDuplicatesWithinWatermark("description")
-        .drop("ingest_ts")
-    else cleaned.dropDuplicates("description")
-  }
+  /** Streaming pin path: deserialize + the batch cleaner. */
+  def pinStream(raw: DataFrame): DataFrame =
+    deserialize(raw, Schemas.pinRaw).transform(Cleaners.pinClean)
 
   /** [[pinStream]] with per-batch data-quality counters attached via
     * `observe` (a CollectMetrics node): row count, post-clean NULL
@@ -291,8 +284,8 @@ object StreamPipeline {
     * the producer changed its schema). The 100 TB telemetry shape:
     * monitoring cost must be O(0) passes, not a shadow pipeline.
     */
-  def pinStreamObserved(raw: DataFrame, bounded: Boolean = false): DataFrame =
-    pinStream(raw, bounded).observe("pin_quality",
+  def pinStreamObserved(raw: DataFrame): DataFrame =
+    pinStream(raw).observe("pin_quality",
       count(lit(1)).as("n_rows"),
       sum(when(col("follower_count").isNull, 1L).otherwise(0L))
         .as("n_null_follower"),
@@ -300,21 +293,15 @@ object StreamPipeline {
         .as("n_null_category"))
 
   /** Streaming geo path (`KINESIS:138-149`). */
-  def geoStream(raw: DataFrame, bounded: Boolean = false): DataFrame = {
-    val cleaned = deserialize(raw, Schemas.geoRaw)
-      .transform(Cleaners.geoCleanCore)
-    if (bounded)
-      cleaned.withWatermark("timestamp", "1 hour")
-        .dropDuplicatesWithinWatermark("ind")
-    else cleaned.dropDuplicates("ind")
-  }
+  def geoStream(raw: DataFrame): DataFrame =
+    deserialize(raw, Schemas.geoRaw).transform(Cleaners.geoClean)
 
   /** [[geoStream]] with [[pinStreamObserved]]'s per-batch counters:
     * unparseable timestamps and NULL coordinate components both signal
     * producer drift.
     */
-  def geoStreamObserved(raw: DataFrame, bounded: Boolean = false): DataFrame =
-    geoStream(raw, bounded).observe("geo_quality",
+  def geoStreamObserved(raw: DataFrame): DataFrame =
+    geoStream(raw).observe("geo_quality",
       count(lit(1)).as("n_rows"),
       sum(when(col("timestamp").isNull, 1L).otherwise(0L))
         .as("n_null_timestamp"),
@@ -323,21 +310,15 @@ object StreamPipeline {
         .as("n_null_coord"))
 
   /** Streaming user path (`KINESIS:153-163`). */
-  def userStream(raw: DataFrame, bounded: Boolean = false): DataFrame = {
-    val cleaned = deserialize(raw, Schemas.userRaw)
-      .transform(Cleaners.userCleanCore)
-    if (bounded)
-      cleaned.withWatermark("date_joined", "1 hour")
-        .dropDuplicatesWithinWatermark("ind")
-    else cleaned.dropDuplicates("ind")
-  }
+  def userStream(raw: DataFrame): DataFrame =
+    deserialize(raw, Schemas.userRaw).transform(Cleaners.userClean)
 
   /** [[userStream]] with per-batch counters: NULL date_joined flags an
     * unparseable date; NULL user_name flags a missing name component
     * (concat propagates NULL).
     */
-  def userStreamObserved(raw: DataFrame, bounded: Boolean = false): DataFrame =
-    userStream(raw, bounded).observe("user_quality",
+  def userStreamObserved(raw: DataFrame): DataFrame =
+    userStream(raw).observe("user_quality",
       count(lit(1)).as("n_rows"),
       sum(when(col("date_joined").isNull, 1L).otherwise(0L))
         .as("n_null_date"),
@@ -366,13 +347,6 @@ object StreamPipeline {
   case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
       n_events: Long, duration_sec: Long)
 
-  /** Custom streaming state machine: per-user sessionization with a gap
-    * rule, via `flatMapGroupsWithState` (SURVEY.md §2.11 T4 extension —
-    * the arbitrary-state API the reference never needed). A session closes
-    * when a later event arrives more than `gapMin` past the last one, or
-    * when the group times out; closed sessions are emitted in Append mode.
-    * State per user is three longs — the bounded-state production shape.
-    */
   /** [[sessionizeStream]] via the native `session_window` streaming
     * aggregation — Spark's own session operator: state-store-backed
     * window merging, watermark-bounded state, Append-mode emission once
@@ -380,7 +354,11 @@ object StreamPipeline {
     * machine to maintain, and semantics identical to the batch
     * [[graft.ops.EventOps.sessionizeNative]] (touching windows merge,
     * `session_end = last + gap`) — asserted in spec against the
-    * flatMapGroupsWithState twin.
+    * flatMapGroupsWithState twin. Prefer this form when the per-session
+    * output is expressible as aggregates (here `n_events` and
+    * `total_value`); drop to `flatMapGroupsWithState` only for session
+    * logic aggregates can't state (mid-session emission, custom
+    * eviction).
     */
   def sessionizeStreamNative(
       events: org.apache.spark.sql.Dataset[SessionEvent],
@@ -388,12 +366,19 @@ object StreamPipeline {
     events.toDF()
       .withWatermark("ts", watermark)
       .groupBy(col("user_id"), session_window(col("ts"), s"$gapMin minutes"))
-      .agg(count(lit(1)).as("n_events"))
+      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
       .select(col("user_id"),
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
-        col("n_events"))
+        col("n_events"), col("total_value"))
 
+  /** Custom streaming state machine: per-user sessionization with a gap
+    * rule, via `flatMapGroupsWithState` (SURVEY.md §2.11 T4 extension —
+    * the arbitrary-state API the reference never needed). A session closes
+    * when a later event arrives more than `gapMin` past the last one, or
+    * when the group times out; closed sessions are emitted in Append mode.
+    * State per user is three longs — the bounded-state production shape.
+    */
   def sessionizeStream(events: org.apache.spark.sql.Dataset[SessionEvent],
       gapMin: Int = 30): org.apache.spark.sql.Dataset[SessionOut] = {
     import events.sparkSession.implicits._
@@ -522,24 +507,6 @@ object StreamPipeline {
       .transformWithState(new SessionProcessor(gapMin),
         TimeMode.EventTime(), OutputMode.Append())
   }
-
-  /** The declarative twin of [[sessionizeStream]]: Spark's native
-    * `session_window` aggregation — gap-based session grouping with
-    * watermark-bounded state and no hand-written state machine. Prefer
-    * this form when the per-session output is expressible as aggregates;
-    * drop to `flatMapGroupsWithState` only for session logic aggregates
-    * can't state (mid-session emission, custom eviction).
-    */
-  def sessionWindowCounts(events: DataFrame, gapMin: Int = 30): DataFrame =
-    events
-      .withWatermark("ts", s"$gapMin minutes")
-      .groupBy(col("user_id"),
-        session_window(col("ts"), s"$gapMin minutes"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("total_value"))
 
   /** Stream-stream inner join with watermarks and an event-time range
     * bound (T7 extension): match each click to purchases of the same user
@@ -769,31 +736,41 @@ object StreamPipeline {
 
   /** Streaming near-dup admission gate: each micro-batch's documents are
     * admitted only if they do not near-duplicate (n-gram Jaccard ≥
-    * `thresholdPct`%) the already-admitted corpus or a smaller-id peer in
-    * the same batch. Admitted docs and their shingles land as per-batch
-    * SEGMENT directories (`<path>/seg_<batchId>`, overwrite-idempotent),
-    * and a single MANIFEST POINTER at `indexPath/_gate_manifest` (the
-    * applied batch-id list, swapped via FileContext's atomic OVERWRITE
-    * rename) commits BOTH tables at once — the manifest is
-    * simultaneously the batch ledger (a listed id is a no-op on replay)
-    * and the reader's source of truth ([[readGateAdmitted]] /
-    * [[readGateIndex]] union exactly the listed segments), so no crash
-    * point can expose a half-applied batch or divergent out/index
-    * tables: segments written but not listed are invisible garbage the
-    * replay overwrites. This closes the round-7 two-table APPEND window
-    * with the same rename-atomic trick [[TableSink.commit]] uses for
-    * overwrite sinks, applied to appends. State is TABLES, not stream
-    * state (no state store growth; restart = checkpoint + manifest).
-    * The streaming twin of
+    * `thresholdPct`%) a document admitted within the last
+    * `windowBatches` batches or a smaller-id peer in the same batch. The
+    * window defaults to unbounded — dedup against everything the gate
+    * ever admitted. A bounded window is the TTL contract for a stream
+    * with no end: content older than the window re-admits by design, and
+    * the gate's state stays O(window). The streaming twin of
     * [[graft.ops.DedupOps.incrementalJaccardPairs]].
     *
+    * State is TABLES, not stream state (no state store; restart =
+    * checkpoint + manifest). Each batch writes overwrite-idempotent
+    * SEGMENT directories — admitted docs at `<outPath>/seg_<batchId>`,
+    * their shingle hashes at `<indexPath>/seg_<batchId>`, per-doc shingle
+    * counts (the Jaccard denominator) at `<indexPath>/szseg_<batchId>` —
+    * and merges its admitted hashes into its generation's Bloom filter.
+    * One MANIFEST pointer (`_gate_manifest`: a `#hwm <id>` high-water
+    * mark plus the in-window batch ids, swapped by atomic rename) then
+    * commits all of it at once. The manifest is the batch ledger
+    * (checkpointed batch ids are monotonic, so `batchId <= hwm` is a
+    * replay and a no-op) and the readers' truth ([[readGateAdmitted]] /
+    * [[readGateIndex]]): files a crash left before the swap are
+    * invisible, the replay overwrites them, and their Bloom bits can
+    * only add false positives.
+    *
     * Per-batch work: the batch is shingled row-locally (compiled
-    * [[graft.functions.ShingleHashes]]); candidates come only from
-    * postings the batch touches, so each batch costs its own shingle
-    * footprint joined against the index — never index². At 100 TB the
-    * index parquet would be bucketed by `h` (bucket-local joins, no
-    * per-batch index shuffle) and per-doc sizes stored alongside; both are
-    * layout changes, not logic changes.
+    * [[graft.functions.ShingleHashes]]) and probed row-locally against
+    * the live generations' Bloom filters, each read once; only candidate
+    * hashes read the index. Bloom has no false negatives, so every truly
+    * shared hash reaches the exact postings join, and a false positive
+    * only costs a probed hash — a novel batch admits without reading the
+    * index at all. A generation is `windowBatches` consecutive batch
+    * ids, so at most two are live and no filter holds more than a
+    * window's batches; unbounded, there is exactly one. A commit that
+    * expires batches then lists the index directory and deletes expired
+    * segments and filters (a crash mid-GC leaves files the next GC
+    * reaps).
     *
     * Admission rule: reject iff near-dup of an indexed doc or a
     * SMALLER-id batch peer (one pass, deterministic). On a chain-shaped
@@ -801,109 +778,297 @@ object StreamPipeline {
     * chain where batch-internal connected components would keep `c`; the
     * streaming contract trades that corner for O(batch) admission —
     * documented deviation from [[graft.ops.DedupOps.dedupSurvivors]].
+    * While the window covers the stream, decisions equal the full-index
+    * reference [[applyExactGateBatch]]'s (spec-pinned).
     */
   def startNearDupGate(docs: DataFrame, indexPath: String, outPath: String,
       checkpoint: String, n: Int = 3, thresholdPct: Int = 60,
-      maxShingleDf: Int = 1000): StreamingQuery =
+      maxShingleDf: Int = 1000, windowBatches: Long = Long.MaxValue,
+      bloomCapacity: Long = 1L << 22,
+      bloomFpp: Double = 0.01): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyNearDupGateBatch(batch, indexPath, outPath, batchId, n,
-          thresholdPct, maxShingleDf)
+          thresholdPct, maxShingleDf, windowBatches, bloomCapacity,
+          bloomFpp): Unit
       }
       .start()
 
-  /** One admission micro-batch (spec-drivable): compute against the
-    * manifest-listed index segments, write both `seg_<batchId>` dirs,
-    * swap the manifest LAST.
+  /** One admission micro-batch (spec-drivable). Returns the number of
+    * batch shingle hashes that survived the Bloom probe (0 = the index
+    * was not read; -1 = a replayed no-op batch).
     */
   private[graft] def applyNearDupGateBatch(batch: DataFrame,
+      indexPath: String, outPath: String, batchId: Long, n: Int = 3,
+      thresholdPct: Int = 60, maxShingleDf: Int = 1000,
+      windowBatches: Long = Long.MaxValue, bloomCapacity: Long = 1L << 22,
+      bloomFpp: Double = 0.01): Long = {
+    require(windowBatches >= 1)
+    val s = batch.sparkSession
+    import s.implicits._
+    val manifest = readGateManifestLines(s, indexPath)
+    if (batchId <= manifestHwm(manifest)) -1L
+    else {
+      val applied = manifestIds(manifest)
+      // the TTL: batch a is deduped against iff it is at most
+      // windowBatches behind this one
+      val active = applied.filter(a => batchId - a <= windowBatches)
+      val gen = (b: Long) => b / windowBatches
+      val fs = new Path(indexPath)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      // A manifest without the #hwm header was committed under an earlier
+      // layout: no size files (the full-index gate) or one merged filter
+      // file. Rebuild the missing szseg_<b> from seg_<b> (deterministic,
+      // safe on replay) and every filter from its listed segments. This
+      // gate writes both before it lists a batch and always writes the
+      // header, so the probe runs on an index's first commit only and no
+      // per-JVM record of checked segments is needed.
+      val legacy = !manifest.exists(_.startsWith("#hwm "))
+      if (legacy)
+        active.filterNot(b => fs.exists(new Path(s"$indexPath/szseg_$b")))
+          .foreach(b =>
+            shingleCounts(readSegments(s, indexPath, "seg", Seq(b)))
+              .write.mode("overwrite").parquet(s"$indexPath/szseg_$b"))
+      val batchSh = shingles(batch, n).persist()
+      // declared here so the finally below unpersists it on ANY exit: a
+      // failing batch must not pin another copy per foreachBatch retry
+      var admittedSh: DataFrame = null
+      try {
+        val blooms = (active :+ batchId).map(gen).distinct.map { g =>
+          val members = active.filter(gen(_) == g)
+          g -> (if (legacy) buildGenBloom(s, indexPath, members,
+              bloomCapacity, bloomFpp)
+            else readGenBloom(s, indexPath, windowBatches, g, members,
+              bloomCapacity, bloomFpp))
+        }.toMap
+        val probe = BloomFilter.create(bloomCapacity, bloomFpp)
+        blooms.values.foreach(probe.mergeInPlace)
+        // the probe ships as a broadcast, not a plan literal: a literal
+        // prints the filter's megabytes into the plan string of every
+        // query built on it. The checkpoint materializes the candidates,
+        // so the broadcast can go at once.
+        val bc = s.sparkContext.broadcast(probe)
+        val candH =
+          try batchSh.select("h").as[Long]
+            .mapPartitions(_.filter(bc.value.mightContainLong))
+            .distinct().toDF("h").localCheckpoint()
+          finally bc.destroy()
+        val nCand = candH.count()
+        val indexSh =
+          if (active.nonEmpty && nCand > 0)
+            readSegments(s, indexPath, "seg", active)
+              .join(candH, Seq("h"), "left_semi")
+          else Seq.empty[(Long, Long)].toDF("doc_id", "h")
+        // per-doc TOTAL sizes come from the size files: the
+        // candidate-pruned index read undercounts them by construction
+        val indexSizes =
+          if (active.nonEmpty) readSegments(s, indexPath, "szseg", active)
+          else Seq.empty[(Long, Long)].toDF("doc_id", "sz")
+        val rejected = rejectedDocs(indexSh, indexSizes, batchSh,
+          thresholdPct, maxShingleDf)
+        admittedSh = batchSh.join(rejected, Seq("doc_id"), "left_anti")
+          .persist()
+        batch.join(rejected, Seq("doc_id"), "left_anti")
+          .write.mode("overwrite").parquet(s"$outPath/seg_$batchId")
+        admittedSh.write.mode("overwrite")
+          .parquet(s"$indexPath/seg_$batchId")
+        shingleCounts(admittedSh)
+          .write.mode("overwrite").parquet(s"$indexPath/szseg_$batchId")
+        // the filter must hold the batch BEFORE the batch is listed (a
+        // listed batch missing from it would be a false negative)
+        val bloom = blooms(gen(batchId))
+        bloom.mergeInPlace(hashBloom(admittedSh, bloomCapacity, bloomFpp))
+        writeGenBloom(s, indexPath, windowBatches, gen(batchId), bloom)
+        val retained = active :+ batchId
+        swapGateManifest(s, indexPath, retained, hwm = batchId)
+        // GC after the swap, by directory LISTING rather than by the
+        // manifest: the swap drops an expired id before its files go, so
+        // a crash between the two would orphan them forever if GC only
+        // scanned manifest entries. The listing also reaps filters of
+        // other windows and the legacy `_gate_bloom` file. Only a commit
+        // that expired ids lists (an unbounded window never does: its
+        // index has nothing to reap and grows with the stream).
+        if (retained.size <= applied.size) {
+          val liveBlooms = retained.map(gen).distinct
+            .map(g => genBloomPath(indexPath, windowBatches, g).getName).toSet
+          def expired(name: String, prefix: String) =
+            name.startsWith(prefix) &&
+              scala.util.Try(name.stripPrefix(prefix).toLong).toOption
+                .exists(!retained.contains(_))
+          fs.listStatus(new Path(indexPath)).map(_.getPath).foreach { p =>
+            val name = p.getName
+            if (expired(name, "seg_") || expired(name, "szseg_") ||
+                (name.startsWith("_gate_bloom") && !liveBlooms(name)))
+              fs.delete(p, true)
+          }
+        }
+        nCand
+      } finally {
+        batchSh.unpersist()
+        if (admittedSh != null) admittedSh.unpersist()
+      }
+    }
+  }
+
+  /** The full-index reference for [[applyNearDupGateBatch]] (spec-only):
+    * the same admission rule with no window and no Bloom filter — each
+    * batch joins against every manifest-listed index segment, and per-doc
+    * sizes are counted from them. It writes the legacy index layout (no
+    * size files, no `#hwm` header), so specs can also drive the gate's
+    * migration path.
+    */
+  private[graft] def applyExactGateBatch(batch: DataFrame,
       indexPath: String, outPath: String, batchId: Long, n: Int = 3,
       thresholdPct: Int = 60, maxShingleDf: Int = 1000): Unit = {
     val s = batch.sparkSession
     import s.implicits._
     val applied = gateManifest(s, indexPath)
     if (!applied.contains(batchId)) {
-        val batchSh = batch.select(col("doc_id"),
-            explode(graft.functions.ShingleHashes.shingleHashes(
-              graft.ops.TextOps.tokens(lower(col("text"))), n)).as("h"))
-          .persist()
-        try {
-          val indexSh =
-            if (applied.nonEmpty)
-              s.read.parquet(applied.map(b => s"$indexPath/seg_$b"): _*)
-            else Seq.empty[(Long, Long)].toDF("doc_id", "h")
-          val all = indexSh.withColumn("is_new", lit(false))
-            .unionByName(batchSh.withColumn("is_new", lit(true)))
-          // pair-forming postings only (df ∈ [2, maxShingleDf] skew guard,
-          // same contract as the batch pair generators)
-          val pairForming = all.groupBy("h")
-            .agg(count(lit(1)).as("df"))
-            .filter(col("df").between(2, maxShingleDf))
-            .select("h")
-          val postings = all.join(pairForming, Seq("h"))
-          val newSide = postings.filter(col("is_new"))
-            .select(col("h"), col("doc_id").as("doc_new"))
-          val otherSide = postings.select(col("h"),
-            col("doc_id").as("doc_other"), col("is_new").as("other_new"))
-          val shared = newSide.join(otherSide, Seq("h"))
-            .filter(col("doc_other") =!= col("doc_new"))
-            // precedence: every indexed doc, or an earlier (smaller-id)
-            // doc of this batch
-            .filter(!col("other_new") || col("doc_other") < col("doc_new"))
-            .groupBy("doc_new", "doc_other").agg(count(lit(1)).as("shared"))
-          val sizes = all.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-          val rejected = shared
-            .join(sizes.select(col("doc_id").as("doc_new"),
-              col("sz").as("size_new")), Seq("doc_new"))
-            .join(sizes.select(col("doc_id").as("doc_other"),
-              col("sz").as("size_other")), Seq("doc_other"))
-            .filter(col("shared") * 100 >= lit(thresholdPct) *
-              (col("size_new") + col("size_other") - col("shared")))
-            .select(col("doc_new").as("doc_id")).distinct()
-          val admitted = batch.join(rejected, Seq("doc_id"), "left_anti")
-          // overwrite-idempotent segment writes (a replay after a crash
-          // rewrites the same dirs), THEN one manifest swap commits both
-          admitted.write.mode("overwrite")
-            .parquet(s"$outPath/seg_$batchId")
-          batchSh.join(rejected, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$indexPath/seg_$batchId")
-          swapGateManifest(s, indexPath, applied :+ batchId)
-        } finally batchSh.unpersist()
+      val batchSh = shingles(batch, n).persist()
+      try {
+        val indexSh =
+          if (applied.nonEmpty) readSegments(s, indexPath, "seg", applied)
+          else Seq.empty[(Long, Long)].toDF("doc_id", "h")
+        val rejected = rejectedDocs(indexSh, shingleCounts(indexSh),
+          batchSh, thresholdPct, maxShingleDf)
+        batch.join(rejected, Seq("doc_id"), "left_anti")
+          .write.mode("overwrite").parquet(s"$outPath/seg_$batchId")
+        batchSh.join(rejected, Seq("doc_id"), "left_anti")
+          .write.mode("overwrite").parquet(s"$indexPath/seg_$batchId")
+        swapGateManifest(s, indexPath, applied :+ batchId)
+      } finally batchSh.unpersist()
     }
   }
 
+  /** (doc_id, h): one row per n-gram shingle hash of each doc's text. */
+  private def shingles(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"),
+      explode(graft.functions.ShingleHashes.shingleHashes(
+        graft.ops.TextOps.tokens(lower(col("text"))), n)).as("h"))
+
+  /** (doc_id, sz): shingle count per doc. */
+  private def shingleCounts(sh: DataFrame): DataFrame =
+    sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+
+  private def readSegments(s: SparkSession, indexPath: String,
+      prefix: String, ids: Seq[Long]): DataFrame =
+    s.read.parquet(ids.map(b => s"$indexPath/${prefix}_$b"): _*)
+
+  /** The admission rule: doc ids of `batchSh` whose shingle Jaccard with
+    * an indexed doc, or with a smaller-id doc of the same batch, reaches
+    * `thresholdPct`%. `indexSh` must carry EVERY index posting of each
+    * hash it holds (so document frequencies count exactly), and
+    * `indexSizes` (doc_id, sz) the total shingle count of the indexed
+    * docs.
+    */
+  private def rejectedDocs(indexSh: DataFrame, indexSizes: DataFrame,
+      batchSh: DataFrame, thresholdPct: Int,
+      maxShingleDf: Int): DataFrame = {
+    val all = indexSh.withColumn("is_new", lit(false))
+      .unionByName(batchSh.withColumn("is_new", lit(true)))
+    // pair-forming postings only (df ∈ [2, maxShingleDf] skew guard, same
+    // contract as the batch pair generators)
+    val pairForming = all.groupBy("h")
+      .agg(count(lit(1)).as("df"))
+      .filter(col("df").between(2, maxShingleDf))
+      .select("h")
+    val postings = all.join(pairForming, Seq("h"))
+    val newSide = postings.filter(col("is_new"))
+      .select(col("h"), col("doc_id").as("doc_new"))
+    val otherSide = postings.select(col("h"),
+      col("doc_id").as("doc_other"), col("is_new").as("other_new"))
+    val shared = newSide.join(otherSide, Seq("h"))
+      .filter(col("doc_other") =!= col("doc_new"))
+      // precedence: every indexed doc, or an earlier (smaller-id) doc of
+      // this batch
+      .filter(!col("other_new") || col("doc_other") < col("doc_new"))
+      .groupBy("doc_new", "doc_other").agg(count(lit(1)).as("shared"))
+    val sizes = shingleCounts(batchSh).unionByName(indexSizes)
+      .groupBy("doc_id").agg(sum(col("sz")).as("sz"))
+    shared
+      .join(sizes.select(col("doc_id").as("doc_new"),
+        col("sz").as("size_new")), Seq("doc_new"))
+      .join(sizes.select(col("doc_id").as("doc_other"),
+        col("sz").as("size_other")), Seq("doc_other"))
+      .filter(col("shared") * 100 >= lit(thresholdPct) *
+        (col("size_new") + col("size_other") - col("shared")))
+      .select(col("doc_new").as("doc_id")).distinct()
+  }
+
+  /** One generation's filter file. The window is part of the name: a
+    * generation is `windowBatches` consecutive batch ids, so a filter
+    * written under another window covers other batches and is never read
+    * (the GC reaps it). Unbounded, the one filter is `_gate_bloom_all_gen_0`.
+    */
+  private def genBloomPath(indexPath: String, windowBatches: Long,
+      gen: Long): Path = {
+    val w = if (windowBatches == Long.MaxValue) "all"
+      else windowBatches.toString
+    new Path(indexPath, s"_gate_bloom_${w}_gen_$gen")
+  }
+
+  /** A filter over the `h` column; empty for no rows (where the
+    * `stat.bloomFilter` aggregate yields NULL and throws).
+    */
+  private def hashBloom(sh: DataFrame, capacity: Long,
+      fpp: Double): BloomFilter =
+    if (sh.isEmpty) BloomFilter.create(capacity, fpp)
+    else sh.stat.bloomFilter("h", capacity, fpp)
+
+  /** The filter over the admitted hashes of `members` (batch ids). */
+  private def buildGenBloom(s: SparkSession, indexPath: String,
+      members: Seq[Long], capacity: Long, fpp: Double): BloomFilter =
+    if (members.isEmpty) BloomFilter.create(capacity, fpp)
+    else hashBloom(readSegments(s, indexPath, "seg", members), capacity, fpp)
+
+  /** One generation's stored filter; a missing, unreadable, or
+    * parameter-incompatible file (another capacity/fpp: `mergeInPlace`
+    * would throw IncompatibleMergeException on every replay) is rebuilt
+    * from the generation's listed segments — hashes of already-expired
+    * batches drop out.
+    */
+  private[graft] def readGenBloom(s: SparkSession, indexPath: String,
+      windowBatches: Long, gen: Long, members: Seq[Long], capacity: Long,
+      fpp: Double): BloomFilter = {
+    val p = genBloomPath(indexPath, windowBatches, gen)
+    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val stored =
+      if (!f.exists(p)) None
+      else try {
+        val in = f.open(p)
+        try Some(BloomFilter.readFrom(in)) finally in.close()
+      } catch { case _: Exception => None }
+    stored.filter(_.isCompatible(BloomFilter.create(capacity, fpp)))
+      .getOrElse(buildGenBloom(s, indexPath, members, capacity, fpp))
+  }
+
+  private[graft] def writeGenBloom(s: SparkSession, indexPath: String,
+      windowBatches: Long, gen: Long, bloom: BloomFilter): Unit =
+    replaceFile(s, genBloomPath(indexPath, windowBatches, gen))(bloom.writeTo)
+
   private def gateManifestPath(indexPath: String) =
-    new org.apache.hadoop.fs.Path(indexPath, "_gate_manifest")
+    new Path(indexPath, "_gate_manifest")
 
-  /** Applied batch ids, from the manifest pointer (empty = fresh gate).
-    * `#`-prefixed header lines (the rotating gate's high-water mark)
-    * are skipped, so the faithful gates parse a rotated manifest too.
-    */
-  private[graft] def gateManifest(s: SparkSession,
-      indexPath: String): Seq[Long] =
-    readGateManifestLines(s, indexPath).filterNot(_.startsWith("#"))
-      .map(_.toLong)
+  /** Listed batch ids; `#`-prefixed header lines are skipped. */
+  private def manifestIds(lines: Seq[String]): Seq[Long] =
+    lines.filterNot(_.startsWith("#")).map(_.toLong)
 
-  /** The manifest's high-water mark: the largest batch id EVER
-    * committed, surviving the rotating gate's tail-pruning. Read from
-    * the `#hwm <id>` header when present; legacy manifests (every
-    * un-pruned gate) fall back to the max listed id, and a fresh gate
-    * reads -1. Checkpointed batch ids are monotonic, so
-    * `batchId <= hwm` is exactly "already processed" — membership in a
-    * full id list is not needed for replay detection (ADVICE round 12:
-    * the rotating gate re-wrote an O(stream) manifest per commit on the
-    * unbounded streams it exists to bound).
+  /** The high-water mark: the largest batch id EVER committed, surviving
+    * the window's pruning of the listed ids. Read from the `#hwm <id>`
+    * header; a legacy manifest (no header) falls back to the max listed
+    * id, and a fresh gate reads -1.
     */
-  private[graft] def gateHwm(s: SparkSession, indexPath: String): Long = {
-    val lines = readGateManifestLines(s, indexPath)
+  private def manifestHwm(lines: Seq[String]): Long =
     lines.collectFirst {
       case l if l.startsWith("#hwm ") => l.stripPrefix("#hwm ").trim.toLong
     }.getOrElse {
-      val ids = lines.filterNot(_.startsWith("#")).map(_.toLong)
+      val ids = manifestIds(lines)
       if (ids.isEmpty) -1L else ids.max
     }
-  }
+
+  private def gateManifest(s: SparkSession, indexPath: String): Seq[Long] =
+    manifestIds(readGateManifestLines(s, indexPath))
 
   private def readGateManifestLines(s: SparkSession,
       indexPath: String): Seq[String] = {
@@ -920,45 +1085,46 @@ object StreamPipeline {
     }
   }
 
-  /** Atomically repoint the manifest: write a temp file, then
+  /** Atomically replace the file at `p`: write a temp file, then
     * `FileContext.rename(…, Options.Rename.OVERWRITE)` — the one
     * rename-over-existing primitive Hadoop guarantees atomic (plain
     * `FileSystem.rename` refuses an existing destination, and
-    * delete-then-rename would open a no-manifest window in which a
-    * crash FORGETS every admitted batch). Object stores without atomic
-    * rename need their own pointer primitive — same caveat as every
-    * swap in [[TableSink]].
+    * delete-then-rename would open a window in which a crash loses the
+    * file — for the manifest, every admitted batch). Object stores
+    * without atomic rename need their own pointer primitive — same
+    * caveat as every swap in [[TableSink]].
     */
+  private def replaceFile(s: SparkSession, p: Path)(
+      write: java.io.OutputStream => Unit): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val tmp = new Path(p.getParent, p.getName + "__tmp")
+    val out = tmp.getFileSystem(conf).create(tmp, true)
+    try write(out) finally out.close()
+    FileContext.getFileContext(p.toUri, conf)
+      .rename(tmp, p, Options.Rename.OVERWRITE)
+  }
+
+  /** Repoint the manifest; `hwm >= 0` adds the `#hwm` header. */
   private def swapGateManifest(s: SparkSession, indexPath: String,
       applied: Seq[Long], hwm: Long = -1L): Unit = {
-    val p = gateManifestPath(indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(indexPath,
-      "_gate_manifest__tmp")
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = f.create(tmp, true)
     val header = if (hwm >= 0) s"#hwm $hwm\n" else ""
-    try out.write((header + applied.mkString("\n")).getBytes("UTF-8"))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      p.toUri, s.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    replaceFile(s, gateManifestPath(indexPath))(
+      _.write((header + applied.mkString("\n")).getBytes("UTF-8")))
   }
 
   /** The gate's admitted-documents table: every output segment whose
-    * batch id is at or below the manifest's high-water mark. For the
-    * faithful gates this is exactly the manifest-listed set (hwm = max
-    * listed id, every lower id listed); for the rotating gate it is the
-    * FULL admitted history — output segments outlive the pruned index
-    * manifest (the TTL bounds dedup STATE, not the stream's product).
-    * Crash-orphaned segments stay invisible under both: a pre-swap
-    * crash leaves a segment whose id is strictly above the committed
-    * hwm. Fresh gate → empty (schema-typed) frame.
+    * batch id is at or below the manifest's high-water mark — the FULL
+    * admitted history, since output segments outlive the window's pruning
+    * of the index (the window bounds dedup STATE, not the stream's
+    * product). Crash-orphaned segments stay invisible: a pre-swap crash
+    * leaves a segment whose id is strictly above the committed hwm.
+    * Fresh gate → empty (schema-typed) frame.
     */
   def readGateAdmitted(s: SparkSession, outPath: String,
       indexPath: String): DataFrame = {
     import s.implicits._
-    val hwm = gateHwm(s, indexPath)
-    val op = new org.apache.hadoop.fs.Path(outPath)
+    val hwm = manifestHwm(readGateManifestLines(s, indexPath))
+    val op = new Path(outPath)
     val f = op.getFileSystem(s.sparkContext.hadoopConfiguration)
     val visible =
       if (hwm < 0 || !f.exists(op)) Seq.empty[String]
@@ -979,469 +1145,7 @@ object StreamPipeline {
     import s.implicits._
     val applied = gateManifest(s, indexPath)
     if (applied.isEmpty) Seq.empty[(Long, Long)].toDF("doc_id", "h")
-    else s.read.parquet(applied.map(b => s"$indexPath/seg_$b"): _*)
-  }
-
-  /** Bloom-indexed admission variant of [[startNearDupGate]] — the
-    * 100 TB admission shape the plain gate's docstring points at: a
-    * merged Bloom filter over every ADMITTED shingle hash rides as a
-    * sidecar artifact, and each batch probes it ROW-LOCALLY first, so
-    * the (corpus-sized) shingle index is only read for the batch's
-    * Bloom-candidate hashes — a mostly-novel stream admits whole
-    * batches without touching the index at all. Decisions are
-    * BIT-IDENTICAL to the plain gate (spec-pinned on shared slicings):
-    * Bloom has no false negatives, so every truly-shared hash reaches
-    * the exact postings join, and a false positive only costs a probed
-    * hash — the exact join still decides. Two parity obligations the
-    * plain gate got for free are carried explicitly: (a) per-doc TOTAL
-    * shingle counts (the Jaccard denominator) live in `szseg_<b>`
-    * sidecars, since the candidate-pruned index read can no longer
-    * count them; (b) the pair-forming df guard stays exact because a
-    * Bloom-negative hash provably has index df 0.
-    *
-    * Crash discipline: segments + size sidecar + merged Bloom are all
-    * written BEFORE the one manifest swap. A pre-swap crash leaves the
-    * Bloom carrying the doomed batch's hashes — false-positive-only
-    * drift (safe; the replay re-merges the identical hashes, Bloom
-    * union is idempotent bitwise OR). A missing/corrupt sidecar is
-    * rebuilt exactly from the manifest-listed segments.
-    */
-  def startNearDupGateBloom(docs: DataFrame, indexPath: String,
-      outPath: String, checkpoint: String, n: Int = 3,
-      thresholdPct: Int = 60, maxShingleDf: Int = 1000,
-      bloomCapacity: Long = 1L << 22,
-      bloomFpp: Double = 0.01): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyNearDupGateBloomBatch(batch, indexPath, outPath, batchId,
-          n, thresholdPct, maxShingleDf, bloomCapacity, bloomFpp): Unit
-      }
-      .start()
-
-  /** One Bloom-admission micro-batch (spec-drivable). Returns the
-    * number of batch shingle hashes that survived the Bloom probe
-    * (0 = the index was never read — the admission fast path; -1 = a
-    * replayed no-op batch), so the spec can assert the pruning
-    * actually happens.
-    */
-  private[graft] def applyNearDupGateBloomBatch(batch: DataFrame,
-      indexPath: String, outPath: String, batchId: Long, n: Int = 3,
-      thresholdPct: Int = 60, maxShingleDf: Int = 1000,
-      bloomCapacity: Long = 1L << 22, bloomFpp: Double = 0.01): Long = {
-    val s = batch.sparkSession
-    import s.implicits._
-    val applied = gateManifest(s, indexPath)
-    if (applied.contains(batchId)) -1L
-    else {
-      val batchSh = batch.select(col("doc_id"),
-          explode(graft.functions.ShingleHashes.shingleHashes(
-            graft.ops.TextOps.tokens(lower(col("text"))), n)).as("h"))
-        .persist()
-      // declared here so the finally below can unpersist them on ANY
-      // exit: a mid-batch exception must not leak persisted frames
-      // across foreachBatch retries in a long-lived stream (each retry
-      // would otherwise pin another copy of the batch's shingles)
-      var candH: DataFrame = null
-      var admittedSh: DataFrame = null
-      try {
-        val bloom = readGateBloom(s, indexPath, applied, bloomCapacity,
-          bloomFpp)
-        val bos = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(bos)
-        import org.apache.spark.sql.graft.ColumnBridge
-        import org.apache.spark.sql.catalyst.expressions.{
-          BloomFilterMightContain, Literal}
-        val mightContain = ColumnBridge.column(BloomFilterMightContain(
-          Literal(bos.toByteArray, org.apache.spark.sql.types.BinaryType),
-          ColumnBridge.expression(col("h"))))
-        // row-local probe: only these hashes can hit the index (no
-        // false negatives), so only these hashes READ the index
-        candH = batchSh.filter(mightContain).select("h").distinct()
-          .persist()
-        val nCand = candH.count()
-        val indexSh =
-          if (applied.nonEmpty && nCand > 0)
-            s.read.parquet(applied.map(b => s"$indexPath/seg_$b"): _*)
-              .join(candH, Seq("h"), "left_semi")
-          else Seq.empty[(Long, Long)].toDF("doc_id", "h")
-        // per-doc TOTAL sizes from the sidecars — the candidate-pruned
-        // index read undercounts them by construction. A batch whose
-        // szseg sidecar is MISSING (an index built by the plain gate,
-        // which writes no size sidecars, later pointed at this gate)
-        // is healed in place: the sidecar is exactly a per-doc count of
-        // the batch's shingle segment, so rebuild it from seg_<b> and
-        // persist the rebuild (deterministic content — safe on replay)
-        val indexSizes =
-          if (applied.nonEmpty) {
-            // the healing probe is a one-time MIGRATION check (an index
-            // built by the plain gate has no size sidecars), so probe
-            // each segment at most once per JVM — an unbounded stream
-            // would otherwise pay O(applied) fs.exists RPCs on EVERY
-            // commit for a condition that can only be true the first
-            // time a segment is seen (ADVICE round 12). A restart
-            // re-probes once per segment, which is the migration cost,
-            // not a per-batch one.
-            val fsys = new org.apache.hadoop.fs.Path(indexPath)
-              .getFileSystem(s.sparkContext.hadoopConfiguration)
-            val unverified = applied.filterNot(b =>
-              szsegVerified.contains(s"$indexPath#$b"))
-            unverified.filterNot(b => fsys.exists(
-                new org.apache.hadoop.fs.Path(s"$indexPath/szseg_$b")))
-              .foreach { b =>
-                System.err.println(s"[graft] bloom gate: rebuilding " +
-                  s"missing size sidecar szseg_$b from seg_$b")
-                s.read.parquet(s"$indexPath/seg_$b")
-                  .groupBy("doc_id").agg(count(lit(1)).as("sz"))
-                  .write.mode("overwrite")
-                  .parquet(s"$indexPath/szseg_$b")
-              }
-            unverified.foreach(b => szsegVerified.add(s"$indexPath#$b"))
-            s.read.parquet(applied.map(b => s"$indexPath/szseg_$b"): _*)
-          } else Seq.empty[(Long, Long)].toDF("doc_id", "sz")
-        val all = indexSh.withColumn("is_new", lit(false))
-          .unionByName(batchSh.withColumn("is_new", lit(true)))
-        // df parity with the plain gate: candidate h carries its FULL
-        // index postings (semi-join keeps all rows); Bloom-negative h
-        // provably has index df 0 — both sides count identically
-        val pairForming = all.groupBy("h")
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df").between(2, maxShingleDf))
-          .select("h")
-        val postings = all.join(pairForming, Seq("h"))
-        val newSide = postings.filter(col("is_new"))
-          .select(col("h"), col("doc_id").as("doc_new"))
-        val otherSide = postings.select(col("h"),
-          col("doc_id").as("doc_other"), col("is_new").as("other_new"))
-        val shared = newSide.join(otherSide, Seq("h"))
-          .filter(col("doc_other") =!= col("doc_new"))
-          .filter(!col("other_new") || col("doc_other") < col("doc_new"))
-          .groupBy("doc_new", "doc_other")
-          .agg(count(lit(1)).as("shared"))
-        val sizes = batchSh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-          .unionByName(indexSizes)
-          .groupBy("doc_id").agg(sum(col("sz")).as("sz"))
-        val rejected = shared
-          .join(sizes.select(col("doc_id").as("doc_new"),
-            col("sz").as("size_new")), Seq("doc_new"))
-          .join(sizes.select(col("doc_id").as("doc_other"),
-            col("sz").as("size_other")), Seq("doc_other"))
-          .filter(col("shared") * 100 >= lit(thresholdPct) *
-            (col("size_new") + col("size_other") - col("shared")))
-          .select(col("doc_new").as("doc_id")).distinct()
-        val admitted = batch.join(rejected, Seq("doc_id"), "left_anti")
-        admittedSh = batchSh.join(rejected, Seq("doc_id"), "left_anti")
-          .persist()
-        admitted.write.mode("overwrite")
-          .parquet(s"$outPath/seg_$batchId")
-        admittedSh.write.mode("overwrite")
-          .parquet(s"$indexPath/seg_$batchId")
-        admittedSh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-          .write.mode("overwrite").parquet(s"$indexPath/szseg_$batchId")
-        // merge-then-swap: the Bloom must be current BEFORE the batch
-        // becomes visible (a listed batch missing from the Bloom would
-        // be a FALSE NEGATIVE — missed rejections); the reverse order's
-        // worst case is only false positives
-        bloom.mergeInPlace(
-          admittedSh.stat.bloomFilter("h", bloomCapacity, bloomFpp))
-        writeGateBloom(s, indexPath, bloom)
-        swapGateManifest(s, indexPath, applied :+ batchId)
-        nCand
-      } finally {
-        batchSh.unpersist()
-        if (candH != null) candH.unpersist()
-        if (admittedSh != null) admittedSh.unpersist()
-      }
-    }
-  }
-
-  /** Per-JVM record of index segments whose szseg sidecar existence has
-    * been verified (or healed) — keyed `indexPath#batchId` so distinct
-    * gates never collide. Bounded by the number of live segments ever
-    * seen by this JVM; entries for deleted indexes are dead weight, not
-    * a correctness issue (a fresh index dir gets fresh batch writes
-    * with their own sidecars).
-    */
-  private val szsegVerified =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def gateBloomPath(indexPath: String) =
-    new org.apache.hadoop.fs.Path(indexPath, "_gate_bloom")
-
-  /** The merged admitted-shingle Bloom sidecar; a missing, unreadable,
-    * or PARAMETER-INCOMPATIBLE file is rebuilt exactly from the
-    * manifest-listed segments (the segments are the truth, the Bloom a
-    * probe accelerator). Incompatibility matters: a sidecar written
-    * under a different bloomCapacity/bloomFpp has a different bit size,
-    * and `mergeInPlace` on it throws IncompatibleMergeException — a
-    * parameter change would otherwise wedge the stream on every replay
-    * until the sidecar was hand-deleted.
-    */
-  private[graft] def readGateBloom(s: SparkSession, indexPath: String,
-      applied: Seq[Long], capacity: Long,
-      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
-    val p = gateBloomPath(indexPath)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val probe = org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-    val stored =
-      if (!f.exists(p)) None
-      else try {
-        val in = f.open(p)
-        try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-        finally in.close()
-      } catch { case _: Exception => None }
-    stored.filter { b =>
-      val ok = b.isCompatible(probe)
-      if (!ok) System.err.println("[graft] bloom gate: stored sidecar " +
-        "was written with different capacity/fpp parameters — " +
-        "rebuilding from the manifest-listed segments")
-      ok
-    }.getOrElse {
-      if (applied.isEmpty)
-        org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-      else
-        s.read.parquet(applied.map(b => s"$indexPath/seg_$b"): _*)
-          .stat.bloomFilter("h", capacity, fpp)
-    }
-  }
-
-  private[graft] def writeGateBloom(s: SparkSession, indexPath: String,
-      bloom: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    val p = gateBloomPath(indexPath)
-    val tmp = new org.apache.hadoop.fs.Path(indexPath, "_gate_bloom__tmp")
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = f.create(tmp, true)
-    try bloom.writeTo(out) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      p.toUri, s.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  // ---------------------------------------- rotating (TTL'd) admission
-
-  /** TTL'd near-dup admission with ROTATING Bloom GENERATIONS — the
-    * bounded-state form of [[startNearDupGateBloom]] for a stream with
-    * no end (round-11 verdict #8: the one unbounded-state artifact left
-    * in the streaming family). The faithful gates dedup against EVERY
-    * admitted document forever: index segments accumulate without
-    * bound, and a single merged Bloom sized for `bloomCapacity`
-    * insertions sails past its capacity — its false-positive rate
-    * (and so the per-batch index-read fraction) grows monotonically.
-    *
-    * This gate dedups against the last `windowBatches` batches only —
-    * the admission contract becomes "reject near-dups of anything
-    * admitted within the TTL", the standard semantics for unbounded
-    * streams (old content re-admits by design). State is bounded three
-    * ways: (a) segments older than the window are DELETED after each
-    * commit; (b) admitted-hash Blooms are kept per GENERATION of
-    * `genSize` consecutive batches, each sized `bloomCapacity`, so no
-    * filter ever exceeds its design capacity — the probe merges the
-    * ≤ ⌈window/genSize⌉+1 active generations (O(window/genSize) work,
-    * not O(stream)); (c) generations wholly outside the window are
-    * deleted with their segments. Decisions are bit-identical to the
-    * plain gate restricted to the same window (Bloom has no false
-    * negatives; the exact postings join still decides).
-    *
-    * Crash discipline is inherited: segments + sidecars + generation
-    * Bloom land BEFORE the manifest swap (pre-swap crash ⇒ orphaned
-    * files invisible to readers, Bloom pollution is false-positive-only
-    * and idempotent on replay); GC runs AFTER the swap, and a crash
-    * mid-GC just leaves unreferenced files the next commit re-deletes.
-    * A missing/incompatible generation Bloom rebuilds from that
-    * generation's SURVIVING segments — hashes of already-GC'd batches
-    * are dead weight the rebuild correctly drops.
-    */
-  def startNearDupGateRotating(docs: DataFrame, indexPath: String,
-      outPath: String, checkpoint: String, n: Int = 3,
-      thresholdPct: Int = 60, maxShingleDf: Int = 1000,
-      windowBatches: Int = 8, genSize: Int = 4,
-      bloomCapacity: Long = 1L << 22,
-      bloomFpp: Double = 0.01): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyNearDupGateRotatingBatch(batch, indexPath, outPath, batchId,
-          n, thresholdPct, maxShingleDf, windowBatches, genSize,
-          bloomCapacity, bloomFpp): Unit
-      }
-      .start()
-
-  /** One rotating-admission micro-batch (spec-drivable). Returns the
-    * Bloom-candidate hash count like the Bloom gate (-1 = replayed
-    * no-op).
-    */
-  private[graft] def applyNearDupGateRotatingBatch(batch: DataFrame,
-      indexPath: String, outPath: String, batchId: Long, n: Int = 3,
-      thresholdPct: Int = 60, maxShingleDf: Int = 1000,
-      windowBatches: Int = 8, genSize: Int = 4,
-      bloomCapacity: Long = 1L << 22, bloomFpp: Double = 0.01): Long = {
-    require(windowBatches >= 1 && genSize >= 1)
-    val s = batch.sparkSession
-    import s.implicits._
-    val applied = gateManifest(s, indexPath)
-    // replay detection by high-water mark, not list membership: the
-    // manifest below is PRUNED to the in-window tail (ADVICE round 12 —
-    // a full id list re-written per commit is O(stream) metadata on the
-    // unbounded streams this gate exists to bound), and checkpointed
-    // batch ids are monotonic, so id ≤ hwm ⇔ already committed
-    if (batchId <= gateHwm(s, indexPath)) -1L
-    else {
-      // the TTL: batch a is still deduped-against iff it is at most
-      // windowBatches behind this one
-      val active = applied.filter(a => batchId - a <= windowBatches)
-      val fs = new org.apache.hadoop.fs.Path(indexPath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val batchSh = batch.select(col("doc_id"),
-          explode(graft.functions.ShingleHashes.shingleHashes(
-            graft.ops.TextOps.tokens(lower(col("text"))), n)).as("h"))
-        .persist()
-      var candH: DataFrame = null
-      try {
-        // merged probe filter over the ACTIVE generations only
-        val bloom = org.apache.spark.util.sketch.BloomFilter
-          .create(bloomCapacity, bloomFpp)
-        active.map(_ / genSize).distinct.foreach { g =>
-          bloom.mergeInPlace(readGenBloom(s, indexPath, g,
-            active.filter(_ / genSize == g), bloomCapacity, bloomFpp))
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(bos)
-        import org.apache.spark.sql.graft.ColumnBridge
-        import org.apache.spark.sql.catalyst.expressions.{
-          BloomFilterMightContain, Literal}
-        val mightContain = ColumnBridge.column(BloomFilterMightContain(
-          Literal(bos.toByteArray, org.apache.spark.sql.types.BinaryType),
-          ColumnBridge.expression(col("h"))))
-        candH = batchSh.filter(mightContain).select("h").distinct()
-          .persist()
-        val nCand = candH.count()
-        val indexSh =
-          if (active.nonEmpty && nCand > 0)
-            s.read.parquet(active.map(b => s"$indexPath/seg_$b"): _*)
-              .join(candH, Seq("h"), "left_semi")
-          else Seq.empty[(Long, Long)].toDF("doc_id", "h")
-        val indexSizes =
-          if (active.nonEmpty)
-            s.read.parquet(active.map(b => s"$indexPath/szseg_$b"): _*)
-          else Seq.empty[(Long, Long)].toDF("doc_id", "sz")
-        val all = indexSh.withColumn("is_new", lit(false))
-          .unionByName(batchSh.withColumn("is_new", lit(true)))
-        val pairForming = all.groupBy("h")
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df").between(2, maxShingleDf))
-          .select("h")
-        val postings = all.join(pairForming, Seq("h"))
-        val newSide = postings.filter(col("is_new"))
-          .select(col("h"), col("doc_id").as("doc_new"))
-        val otherSide = postings.select(col("h"),
-          col("doc_id").as("doc_other"), col("is_new").as("other_new"))
-        val shared = newSide.join(otherSide, Seq("h"))
-          .filter(col("doc_other") =!= col("doc_new"))
-          .filter(!col("other_new") || col("doc_other") < col("doc_new"))
-          .groupBy("doc_new", "doc_other")
-          .agg(count(lit(1)).as("shared"))
-        val sizes = batchSh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-          .unionByName(indexSizes)
-          .groupBy("doc_id").agg(sum(col("sz")).as("sz"))
-        val rejected = shared
-          .join(sizes.select(col("doc_id").as("doc_new"),
-            col("sz").as("size_new")), Seq("doc_new"))
-          .join(sizes.select(col("doc_id").as("doc_other"),
-            col("sz").as("size_other")), Seq("doc_other"))
-          .filter(col("shared") * 100 >= lit(thresholdPct) *
-            (col("size_new") + col("size_other") - col("shared")))
-          .select(col("doc_new").as("doc_id")).distinct()
-        val admitted = batch.join(rejected, Seq("doc_id"), "left_anti")
-        val admittedSh = batchSh.join(rejected, Seq("doc_id"), "left_anti")
-        admitted.write.mode("overwrite")
-          .parquet(s"$outPath/seg_$batchId")
-        admittedSh.write.mode("overwrite")
-          .parquet(s"$indexPath/seg_$batchId")
-        admittedSh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-          .write.mode("overwrite").parquet(s"$indexPath/szseg_$batchId")
-        // this batch's generation: merge admitted hashes in, write back
-        val g = batchId / genSize
-        val genBloom = readGenBloom(s, indexPath, g,
-          active.filter(_ / genSize == g), bloomCapacity, bloomFpp)
-        genBloom.mergeInPlace(
-          admittedSh.stat.bloomFilter("h", bloomCapacity, bloomFpp))
-        writeGenBloom(s, indexPath, g, genBloom)
-        // the manifest carries only the in-window tail plus the hwm
-        // header — O(window) metadata per commit, replay detection via
-        // the monotonic hwm; the admitted OUTPUT segments are untouched
-        // (readGateAdmitted serves them by id ≤ hwm)
-        val retained = (applied :+ batchId)
-          .filter(a => batchId - a <= windowBatches)
-        swapGateManifest(s, indexPath, retained, hwm = batchId)
-        // GC AFTER the swap, by directory LISTING rather than by the
-        // manifest: a pruned manifest drops an id at the same commit
-        // that deletes its files, so a crash between swap and GC would
-        // orphan them forever if GC only scanned manifest entries. The
-        // index dir holds O(window) live files — one listing per commit
-        // is bounded — and the listing also reaps whatever an earlier
-        // crash left behind (idempotent).
-        val liveIds = retained.toSet
-        val liveGens = retained.map(_ / genSize).toSet
-        def deadId(nme: String, prefix: String, live: Set[Long]) =
-          nme.startsWith(prefix) &&
-            scala.util.Try(nme.stripPrefix(prefix).toLong)
-              .toOption.exists(!live.contains(_))
-        fs.listStatus(new org.apache.hadoop.fs.Path(indexPath))
-          .foreach { st =>
-            val nme = st.getPath.getName
-            if (deadId(nme, "seg_", liveIds) ||
-                deadId(nme, "szseg_", liveIds) ||
-                deadId(nme, "_gate_bloom_gen_", liveGens))
-              fs.delete(st.getPath, true)
-          }
-        nCand
-      } finally {
-        batchSh.unpersist()
-        if (candH != null) candH.unpersist()
-      }
-    }
-  }
-
-  private def genBloomPath(indexPath: String, gen: Long) =
-    new org.apache.hadoop.fs.Path(indexPath, s"_gate_bloom_gen_$gen")
-
-  /** One generation's admitted-hash Bloom; missing, unreadable, or
-    * parameter-incompatible files rebuild from the generation's
-    * surviving active segments (empty filter when none survive).
-    */
-  private[graft] def readGenBloom(s: SparkSession, indexPath: String,
-      gen: Long, activeInGen: Seq[Long], capacity: Long,
-      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
-    val p = genBloomPath(indexPath, gen)
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val probe = org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-    val stored =
-      if (!f.exists(p)) None
-      else try {
-        val in = f.open(p)
-        try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-        finally in.close()
-      } catch { case _: Exception => None }
-    stored.filter(_.isCompatible(probe)).getOrElse {
-      if (activeInGen.isEmpty)
-        org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-      else
-        s.read.parquet(activeInGen.map(b => s"$indexPath/seg_$b"): _*)
-          .stat.bloomFilter("h", capacity, fpp)
-    }
-  }
-
-  private[graft] def writeGenBloom(s: SparkSession, indexPath: String,
-      gen: Long, bloom: org.apache.spark.util.sketch.BloomFilter): Unit = {
-    val p = genBloomPath(indexPath, gen)
-    val tmp = new org.apache.hadoop.fs.Path(indexPath,
-      s"_gate_bloom_gen_${gen}__tmp")
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = f.create(tmp, true)
-    try bloom.writeTo(out) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      p.toUri, s.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    else readSegments(s, indexPath, "seg", applied)
   }
 
   def startMergeSink(df: DataFrame, path: String, checkpoint: String,

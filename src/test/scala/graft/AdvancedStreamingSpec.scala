@@ -141,22 +141,23 @@ class AdvancedStreamingSpec extends AnyFunSuite {
     val b2 = batch( // fully novel batch → Bloom fast path (0 candidates)
       (5L, "nothing in this sentence resembles anything admitted before"),
       (6L, "grapes ferment slowly under the autumn moonlight tonight"))
-    StreamPipeline.applyNearDupGateBatch(b0, pIdx, pOut, 0L)
-    StreamPipeline.applyNearDupGateBatch(b1, pIdx, pOut, 1L)
-    StreamPipeline.applyNearDupGateBatch(b2, pIdx, pOut, 2L)
+    StreamPipeline.applyExactGateBatch(b0, pIdx, pOut, 0L)
+    StreamPipeline.applyExactGateBatch(b1, pIdx, pOut, 1L)
+    StreamPipeline.applyExactGateBatch(b2, pIdx, pOut, 2L)
     // batch 0 probes an EMPTY bloom: index-free fast path
-    assert(StreamPipeline.applyNearDupGateBloomBatch(b0, bIdx, bOut, 0L)
+    assert(StreamPipeline.applyNearDupGateBatch(b0, bIdx, bOut, 0L)
       === 0L, "empty-gate batch must skip the index read")
     // batch 1 shares doc 0's shingles: the probe must surface them
-    assert(StreamPipeline.applyNearDupGateBloomBatch(b1, bIdx, bOut, 1L)
+    assert(StreamPipeline.applyNearDupGateBatch(b1, bIdx, bOut, 1L)
       > 0L, "a true cross-batch dup must produce Bloom candidates")
     // sidecar recovery: delete the Bloom; batch 2 must rebuild it from
     // the listed segments and still decide identically
     val fs = new org.apache.hadoop.fs.Path(bIdx).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(bIdx, "_gate_bloom"),
-      false), "bloom sidecar must exist after batch 1")
-    StreamPipeline.applyNearDupGateBloomBatch(b2, bIdx, bOut, 2L)
+    assert(fs.delete(
+      new org.apache.hadoop.fs.Path(bIdx, "_gate_bloom_all_gen_0"), false),
+      "bloom sidecar must exist after batch 1")
+    StreamPipeline.applyNearDupGateBatch(b2, bIdx, bOut, 2L)
     def admitted(out: String, idx: String) =
       StreamPipeline.readGateAdmitted(spark, out, idx)
         .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -169,7 +170,7 @@ class AdvancedStreamingSpec extends AnyFunSuite {
         .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(indexed(bIdx) === indexed(pIdx))
     // replayed id is a no-op
-    assert(StreamPipeline.applyNearDupGateBloomBatch(b1, bIdx, bOut, 1L)
+    assert(StreamPipeline.applyNearDupGateBatch(b1, bIdx, bOut, 1L)
       === -1L)
   }
 
@@ -183,7 +184,7 @@ class AdvancedStreamingSpec extends AnyFunSuite {
     val (idx, out) = (s"$base/index", s"$base/out")
     def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     val dupText = "the quick brown fox jumps over the lazy dog again"
-    StreamPipeline.applyNearDupGateBloomBatch(
+    StreamPipeline.applyNearDupGateBatch(
       batch((0L, dupText),
         (1L, "completely different words arranged in another order here")),
       idx, out, 0L)
@@ -202,22 +203,22 @@ class AdvancedStreamingSpec extends AnyFunSuite {
     b1sh.write.parquet(s"$idx/seg_1")
     b1sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
       .write.parquet(s"$idx/szseg_1")
-    val polluted = StreamPipeline.readGateBloom(spark, idx, Seq(0L),
-      1L << 22, 0.01)
+    val polluted = StreamPipeline.readGenBloom(spark, idx, Long.MaxValue,
+      0L, Seq(0L), 1L << 22, 0.01)
     polluted.mergeInPlace(b1sh.stat.bloomFilter("h", 1L << 22, 0.01))
-    StreamPipeline.writeGateBloom(spark, idx, polluted)
+    StreamPipeline.writeGenBloom(spark, idx, Long.MaxValue, 0L, polluted)
     // unlisted artifacts are invisible; the early bloom entries can only
     // ADD candidate probes (false positives), never change decisions
     assert(StreamPipeline.readGateAdmitted(spark, out, idx)
       .select("doc_id").collect().map(_.getLong(0)).toSet === afterB0)
     // replay heals: same decisions, batch now visible exactly once
-    StreamPipeline.applyNearDupGateBloomBatch(b1, idx, out, 1L)
+    StreamPipeline.applyNearDupGateBatch(b1, idx, out, 1L)
     assert(StreamPipeline.readGateAdmitted(spark, out, idx)
       .select("doc_id").collect().map(_.getLong(0)).toSet
       === Set(0L, 1L, 2L))
     // a later cross-batch dup of doc 0 is still rejected through the
     // healed bloom+index state
-    StreamPipeline.applyNearDupGateBloomBatch(
+    StreamPipeline.applyNearDupGateBatch(
       batch((3L, dupText),
         (4L, "grapes ferment slowly under the autumn moonlight tonight")),
       idx, out, 2L)
@@ -245,15 +246,15 @@ class AdvancedStreamingSpec extends AnyFunSuite {
       (3L, "yet another entirely novel document with fresh content words"))
     // plain-gate twin for decision parity
     val (pIdx, pOut) = (s"$base/p_index", s"$base/p_out")
-    StreamPipeline.applyNearDupGateBatch(b0, pIdx, pOut, 0L)
-    StreamPipeline.applyNearDupGateBatch(b1, pIdx, pOut, 1L)
+    StreamPipeline.applyExactGateBatch(b0, pIdx, pOut, 0L)
+    StreamPipeline.applyExactGateBatch(b1, pIdx, pOut, 1L)
     // (a) capacity change between batches: batch 0 writes a 2^22 bloom,
-    // batch 1 runs with 2^20 — readGateBloom must detect the
+    // batch 1 runs with 2^20 — readGenBloom must detect the
     // incompatible sidecar and rebuild at the CURRENT parameters
     val (aIdx, aOut) = (s"$base/a_index", s"$base/a_out")
-    StreamPipeline.applyNearDupGateBloomBatch(b0, aIdx, aOut, 0L,
+    StreamPipeline.applyNearDupGateBatch(b0, aIdx, aOut, 0L,
       bloomCapacity = 1L << 22)
-    StreamPipeline.applyNearDupGateBloomBatch(b1, aIdx, aOut, 1L,
+    StreamPipeline.applyNearDupGateBatch(b1, aIdx, aOut, 1L,
       bloomCapacity = 1L << 20) // would throw IncompatibleMergeException
     def admitted(out: String, idx: String) =
       StreamPipeline.readGateAdmitted(spark, out, idx)
@@ -265,12 +266,12 @@ class AdvancedStreamingSpec extends AnyFunSuite {
     // Bloom gate at it must heal the sidecars from seg_<b> and decide
     // identically (previously failed the batch unrecoverably)
     val (mIdx, mOut) = (s"$base/m_index", s"$base/m_out")
-    StreamPipeline.applyNearDupGateBatch(b0, mIdx, mOut, 0L)
+    StreamPipeline.applyExactGateBatch(b0, mIdx, mOut, 0L)
     val fs = new org.apache.hadoop.fs.Path(mIdx).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$mIdx/szseg_0")),
       "sanity: the plain gate writes no size sidecars")
-    StreamPipeline.applyNearDupGateBloomBatch(b1, mIdx, mOut, 1L)
+    StreamPipeline.applyNearDupGateBatch(b1, mIdx, mOut, 1L)
     assert(admitted(mOut, mIdx) === admitted(pOut, pIdx),
       "plain→Bloom index migration diverged from the plain gate")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$mIdx/szseg_0")),
@@ -293,11 +294,12 @@ class AdvancedStreamingSpec extends AnyFunSuite {
       "yet another entirely novel document with fresh content words",
       "grapes ferment slowly under the autumn moonlight tonight",
       "nothing in this sentence resembles anything admitted before")
-    // window=1, genSize=1: batch b dedups against batch b-1 only
+    // window=1 (so one batch per generation): batch b dedups against
+    // batch b-1 only
     val (idx, out) = (s"$base/index", s"$base/out")
     def apply(b: org.apache.spark.sql.DataFrame, id: Long) =
-      StreamPipeline.applyNearDupGateRotatingBatch(b, idx, out, id,
-        windowBatches = 1, genSize = 1)
+      StreamPipeline.applyNearDupGateBatch(b, idx, out, id,
+        windowBatches = 1)
     apply(batch((0L, dupText), (1L, fresh(0))), 0L)
     apply(batch((2L, dupText), (3L, fresh(1))), 1L) // dup of 0 → reject
     apply(batch((4L, fresh(2))), 2L) // batch 0 expires here
@@ -310,9 +312,9 @@ class AdvancedStreamingSpec extends AnyFunSuite {
     val files = new java.io.File(idx).listFiles().map(_.getName).toSet
     assert(!files.contains("seg_0") && !files.contains("szseg_0"),
       s"expired segment not GC'd: $files")
-    assert(!files.contains("_gate_bloom_gen_0"),
+    assert(!files.contains("_gate_bloom_1_gen_0"),
       s"expired generation Bloom not GC'd: $files")
-    assert(files.contains("seg_3") && files.contains("_gate_bloom_gen_3"))
+    assert(files.contains("seg_3") && files.contains("_gate_bloom_1_gen_3"))
     // replayed id is a no-op — including an id already PRUNED from the
     // manifest tail (round-13: replay detection is the monotonic
     // high-water mark, not list membership)
@@ -337,15 +339,90 @@ class AdvancedStreamingSpec extends AnyFunSuite {
       batch((2L, dupText), (3L, fresh(1))),
       batch((4L, dupText), (5L, fresh(2))))
     batches.zipWithIndex.foreach { case (b, i) =>
-      StreamPipeline.applyNearDupGateBatch(b, pIdx, pOut, i.toLong)
-      StreamPipeline.applyNearDupGateRotatingBatch(b, rIdx, rOut,
-        i.toLong, windowBatches = 100, genSize = 2)
+      StreamPipeline.applyExactGateBatch(b, pIdx, pOut, i.toLong)
+      StreamPipeline.applyNearDupGateBatch(b, rIdx, rOut,
+        i.toLong, windowBatches = 100)
     }
     def got(o: String, i: String) =
       StreamPipeline.readGateAdmitted(spark, o, i)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got(rOut, rIdx) === got(pOut, pIdx),
       "full-window rotating gate diverged from the plain gate")
+  }
+
+  test("near-dup gate keeps no per-JVM state that grows with the " +
+      "stream: 12 batches with windowBatches = 2 leave at most window + 1 " +
+      "segments and two generation filters on disk, and no in-memory " +
+      "cache of checked segments") {
+    import spark.implicits._
+    val base = java.nio.file.Files
+      .createTempDirectory("neardup-bounded").toString
+    val (idx, out) = (s"$base/index", s"$base/out")
+    val window = 2
+    (0L until 12L).foreach { i =>
+      StreamPipeline.applyNearDupGateBatch(
+        Seq((i, s"document number $i talks about topic $i in its own words"))
+          .toDF("doc_id", "text"),
+        idx, out, i, windowBatches = window)
+    }
+    // no cache at all: the pipeline object holds no collection-valued
+    // field (a per-JVM set of checked segments grew one key per batch)
+    val caches = StreamPipeline.getClass.getDeclaredFields.filter { f =>
+      Seq(classOf[java.util.Collection[_]], classOf[java.util.Map[_, _]],
+        classOf[scala.collection.Iterable[_]])
+        .exists(_.isAssignableFrom(f.getType))
+    }
+    assert(caches.isEmpty, s"per-JVM caches: ${caches.map(_.getName).toSeq}")
+    val files = new java.io.File(idx).listFiles().map(_.getName).toSeq
+    assert(files.count(_.startsWith("seg_")) <= window + 1, files)
+    assert(files.count(_.startsWith("szseg_")) <= window + 1, files)
+    assert(files.count(_.startsWith("_gate_bloom")) <= 2, files)
+    assert(StreamPipeline.readGateIndex(spark, idx)
+      .select("doc_id").distinct().count() <= window + 1)
+    assert(StreamPipeline.readGateAdmitted(spark, out, idx).count() === 12L,
+      "the window bounds dedup state, not the admitted output")
+  }
+
+  test("near-dup gate reads an index in the single-filter layout (no " +
+      "#hwm header, one merged _gate_bloom file): that file is never " +
+      "trusted, the generation-0 filter is rebuilt from the listed " +
+      "segments, and decisions equal the full-index reference") {
+    import spark.implicits._
+    val base = java.nio.file.Files
+      .createTempDirectory("neardup-legacy").toString
+    def batch(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    val dupText = "the quick brown fox jumps over the lazy dog again"
+    val b0 = batch(
+      (0L, dupText),
+      (1L, "completely different words arranged in another order here"))
+    val b1 = batch(
+      (2L, dupText), // cross-batch dup of 0 → must be rejected
+      (3L, "yet another entirely novel document with fresh content words"))
+    val (pIdx, pOut) = (s"$base/p_index", s"$base/p_out")
+    StreamPipeline.applyExactGateBatch(b0, pIdx, pOut, 0L)
+    StreamPipeline.applyExactGateBatch(b1, pIdx, pOut, 1L)
+    // the single-filter layout: segments, size files, a header-less
+    // manifest and a merged filter — here an EMPTY one, which would hide
+    // every cross-batch dup if the gate read it
+    val (lIdx, lOut) = (s"$base/l_index", s"$base/l_out")
+    StreamPipeline.applyExactGateBatch(b0, lIdx, lOut, 0L)
+    spark.read.parquet(s"$lIdx/seg_0").groupBy("doc_id")
+      .agg(count(lit(1)).as("sz")).write.parquet(s"$lIdx/szseg_0")
+    val o = new java.io.FileOutputStream(s"$lIdx/_gate_bloom")
+    try org.apache.spark.util.sketch.BloomFilter.create(1L << 22, 0.01)
+      .writeTo(o) finally o.close()
+    StreamPipeline.applyNearDupGateBatch(b1, lIdx, lOut, 1L)
+    def admitted(out: String, idx: String) =
+      StreamPipeline.readGateAdmitted(spark, out, idx)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(admitted(lOut, lIdx) === Set(0L, 1L, 3L))
+    assert(admitted(lOut, lIdx) === admitted(pOut, pIdx))
+    assert(new java.io.File(s"$lIdx/_gate_bloom_all_gen_0").exists(),
+      "the generation-0 filter must be written back")
+    // the commit adds the #hwm header, so the rebuild runs only once
+    val manifest = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$lIdx/_gate_manifest")), "UTF-8")
+    assert(manifest.startsWith("#hwm 1"), manifest)
   }
 
   test("flatMapGroupsWithState sessionization: gap closes a session, " +
@@ -469,8 +546,7 @@ class AdvancedStreamingSpec extends AnyFunSuite {
       "sessionizer on counts") {
     import spark.implicits._
     val mem = MemoryStream[SessionEvent](spark)
-    val out = StreamPipeline.sessionWindowCounts(
-      mem.toDF(), gapMin = 30)
+    val out = StreamPipeline.sessionizeStreamNative(mem.toDS(), gapMin = 30)
     val q = out.writeStream.format("memory").queryName("sw_out")
       .outputMode("append").start()
     try {

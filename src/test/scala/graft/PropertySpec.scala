@@ -208,4 +208,56 @@ class PropertySpec extends AnyFunSuite {
       assert(out(id).getLong(3) === 0L, s"doc $id must be untouched")
     }
   }
+
+  test("near-dup gate ≡ full-index reference over random batch splits: " +
+      "1–5 batches, window unbounded and window ≥ the batch count admit " +
+      "and index exactly the reference's doc ids") {
+    import graft.streaming.StreamPipeline
+    // 6 unrelated 20-word docs plus 4 planted near-dups (an exact copy or
+    // one word swapped: Jaccard ≥ 71% on trigrams), under shuffled ids —
+    // a dup may carry the smaller id — split into k batches whose ids
+    // start at an offset, so a window of k still spans two generations
+    val vocab = Gen.oneOf((0 until 300).map(i => s"w$i"))
+    val genCase = for {
+      bases <- Gen.listOfN(6, Gen.listOfN(20, vocab))
+      dups <- Gen.listOfN(4, for {
+        b <- Gen.oneOf(bases)
+        pos <- Gen.choose(0, 19)
+        w <- Gen.oneOf(Gen.const(b(pos)), vocab)
+      } yield b.updated(pos, w))
+      keys <- Gen.listOfN(10, Gen.choose(0.0, 1.0))
+      k <- Gen.choose(1, 5)
+      assign <- Gen.listOfN(10, Gen.choose(0, k - 1))
+      offset <- Gen.choose(0L, 6L)
+      extra <- Gen.choose(0, 2)
+    } yield ((bases ++ dups).map(_.mkString(" ")),
+      (0L until 10L).sortBy(i => keys(i.toInt)), k, assign, offset, k + extra)
+    sample(genCase, 4).foreach { case (texts, ids, k, assign, offset, w) =>
+      val docs = ids.zip(texts)
+      val batches = (0 until k).map(b =>
+        docs.zip(assign).collect { case (d, a) if a == b => d }
+          .toDF("doc_id", "text"))
+      val base = java.nio.file.Files
+        .createTempDirectory("neardup-prop").toString
+      def run(name: String)(apply: (org.apache.spark.sql.DataFrame,
+          String, String, Long) => Unit): (Set[Long], Set[Long]) = {
+        val (idx, out) = (s"$base/${name}_index", s"$base/${name}_out")
+        batches.zipWithIndex.foreach { case (b, i) =>
+          apply(b, idx, out, offset + i) }
+        (StreamPipeline.readGateAdmitted(spark, out, idx)
+            .select("doc_id").as[Long].collect().toSet,
+          StreamPipeline.readGateIndex(spark, idx)
+            .select("doc_id").distinct().as[Long].collect().toSet)
+      }
+      val exact = run("exact")(StreamPipeline.applyExactGateBatch(_, _, _, _))
+      val unbounded = run("unbounded")(
+        StreamPipeline.applyNearDupGateBatch(_, _, _, _))
+      val windowed = run("windowed")(
+        StreamPipeline.applyNearDupGateBatch(_, _, _, _, windowBatches = w))
+      val ctx = s"k=$k offset=$offset window=$w ids=$ids assign=$assign"
+      assert(exact._1.size < docs.size, s"no near-dup rejected: $ctx")
+      assert(unbounded === exact, s"unbounded gate diverged: $ctx")
+      assert(windowed === exact, s"windowed gate diverged: $ctx")
+    }
+  }
 }
