@@ -299,13 +299,19 @@ object EventOps {
       .orderBy("day")
   }
 
+  /** The windowed funnel's step window (one day), shared by
+    * [[funnelWindowed]] and its streaming twin
+    * `StreamPipeline.startFunnelSink` so the two cannot drift.
+    */
+  val FunnelWindowSec = 86400L
+
   /** Windowed (strict) funnel — [[funnel]]'s production variant: each
-    * next step must land within `windowSec` of the previous step's
-    * time, so "viewed in March, purchased in July" no longer counts as
-    * a conversion. Greedy earliest-step semantics (the first qualifying
-    * event per stage), matching the unwindowed op; per stage also the
-    * exact MEDIAN latency from the previous step — the "where does the
-    * funnel stall" number.
+    * next step must land within [[FunnelWindowSec]] of the previous
+    * step's time, so "viewed in March, purchased in July" no longer
+    * counts as a conversion. Greedy earliest-step semantics (the first
+    * qualifying event per stage), matching the unwindowed op; per stage
+    * also the exact MEDIAN latency from the previous step — the "where
+    * does the funnel stall" number.
     *
     * Exactness: stage times are integer-micros minima; window bounds
     * are integer comparisons; medians are ONE partial-merged
@@ -315,10 +321,9 @@ object EventOps {
     * scan) joined against the previous stage's user-keyed minima —
     * co-partitioned user-keyed shuffles, no window function anywhere.
     */
-  def funnelWindowed(s: SparkSession, d: String,
-      windowSec: Long = 86400L): DataFrame = {
+  def funnelWindowed(s: SparkSession, d: String): DataFrame = {
     import graft.functions.ExactQuantiles.exactQuantiles
-    val winUs = windowSec * 1000000L
+    val winUs = FunnelWindowSec * 1000000L
     val ev = Tables.events(s, d)
       .select(col("user_id"), col("event_type"),
         expr("unix_micros(ts)").as("us"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -99,42 +100,51 @@ object Sinks {
     */
   def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
       targetRecordsPerFile: Long): (Int, Int) = {
-    def parquetFiles(p: String): Int = {
-      val fs = new java.io.File(p).listFiles()
-      if (fs == null) 0 else fs.count(_.getName.endsWith(".parquet"))
-    }
-    val before = parquetFiles(path)
+    val dest = new Path(path)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = parquetFileCount(spark, path)
     val rows = spark.read.parquet(path).count()
     val nFiles = math.max(1L, (rows + targetRecordsPerFile - 1)
       / targetRecordsPerFile).toInt
-    val tmp = path + "__compact_tmp"
+    val tmp = new Path(path + "__compact_tmp")
     spark.read.parquet(path).repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
+      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     // Swap, new-files-first: compacted part files carry fresh UUID names,
     // so moving them in BEFORE deleting originals means a crash mid-swap
     // leaves a readable (at worst temporarily duplicated) table instead of
     // a truncated one. Only then are the pre-swap originals removed —
     // excluding any name that the move just (re)placed, e.g. _SUCCESS.
-    val dest = new java.io.File(path)
-    val originals = Option(dest.listFiles()).getOrElse(Array.empty)
-      .filterNot(_.isDirectory)
-    val tmpDir = new java.io.File(tmp)
-    val compacted = Option(tmpDir.listFiles()).getOrElse(Array.empty)
-      .filterNot(_.isDirectory)
+    def files(dir: Path) = fs.listStatus(dir).filter(_.isFile).map(_.getPath)
+    val originals = files(dest)
+    val compacted = files(tmp)
     compacted.foreach { f =>
-      java.nio.file.Files.move(f.toPath,
-        new java.io.File(dest, f.getName).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val to = new Path(dest, f.getName)
+      if (fs.exists(to)) fs.delete(to, false)
+      if (!fs.rename(f, to))
+        throw new java.io.IOException(
+          s"[compactParquet] rename $f -> $to failed")
     }
     val newNames = compacted.map(_.getName).toSet
     originals.filterNot(f => newNames.contains(f.getName)).foreach { f =>
-      if (!f.delete())
-        System.err.println(s"[compactParquet] failed to delete stale ${f.getPath}")
+      if (!fs.delete(f, false))
+        System.err.println(s"[compactParquet] failed to delete stale $f")
     }
-    if (!tmpDir.delete())
+    if (fs.listStatus(tmp).nonEmpty || !fs.delete(tmp, false))
       System.err.println(
         s"[compactParquet] temp dir not empty after swap, left behind: $tmp")
-    (before, parquetFiles(path))
+    (before, parquetFileCount(spark, path))
+  }
+
+  /** Parquet part files directly under `path` (0 when it is absent),
+    * listed through the Hadoop FileSystem: `java.io.File` lists nothing
+    * for a `file:`, `hdfs://` or `s3a://` path.
+    */
+  def parquetFileCount(spark: org.apache.spark.sql.SparkSession,
+      path: String): Int = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) 0
+    else fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
   }
 
   /** The reference's `saveAsTable` + re-query pattern without a metastore:

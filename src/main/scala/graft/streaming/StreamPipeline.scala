@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
@@ -668,6 +668,165 @@ object StreamPipeline {
           org.apache.spark.sql.types.StringType))))
       .text(dir).withColumnRenamed("value", "data")
 
+  /** The one `foreachBatch` scaffold every table-maintenance sink below
+    * starts: `apply` gets each micro-batch with its checkpointed id.
+    */
+  private def startBatchSink(df: DataFrame, checkpoint: String)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(apply)
+      .start()
+
+  /** The exactly-once protocol of every state-table sink. foreachBatch
+    * replays a batch id verbatim after checkpoint recovery, and most
+    * folds double-apply under a re-merge (counts, sums, CMS counters,
+    * KLL weights, the funnel's out-of-order counts), so a `batchId` the
+    * [[TableSink]] ledger already holds is skipped and the call returns
+    * false. Otherwise `next` folds the batch into the stored table (None
+    * before the first commit) and [[TableSink.commit]] swaps the result
+    * in together with the ledger marker — one atomic unit, so no crash
+    * point applies a batch twice. `next` may read the stored table: the
+    * commit stages the new table before the live directory moves. State
+    * lives in the table, not the stream (no watermark, no state store):
+    * a restart resumes from the checkpoint and the table.
+    */
+  private def foldTable(s: SparkSession, path: String, batchId: Long)(
+      next: Option[DataFrame] => DataFrame): Boolean =
+    !TableSink.alreadyApplied(s, path, batchId) && {
+      val stored =
+        if (TableSink.hasParquet(s, path)) Some(s.read.parquet(path))
+        else None
+      TableSink.commit(s, path, batchId, next(stored))
+      true
+    }
+
+  /** An associative keyed rollup kept as a state table: each micro-batch
+    * projects its rows (`input`) and groups them by `keys` into `partial`
+    * aggregates; [[applyRollupBatch]] unions those with the stored table
+    * and re-groups the union with `merge`. `merge` is associative and
+    * commutative over partials, so every raw row enters exactly one batch
+    * partial and any batch slicing converges to the one-pass table, in
+    * the sense each value's contract states. Consumers answer coarser
+    * grains and windows by merging stored partials, never by re-reading
+    * events.
+    */
+  final case class Rollup(input: Seq[Column], keys: Seq[String],
+      partial: Seq[Column], merge: Seq[Column]) {
+    def partialOf(batch: DataFrame): DataFrame =
+      aggregate(batch.select(input: _*), partial)
+    def mergeOf(tables: DataFrame): DataFrame = aggregate(tables, merge)
+    private def aggregate(df: DataFrame, aggs: Seq[Column]) =
+      df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  object Rollup {
+    private val dec = "decimal(18,2)"
+
+    /** Count, decimal sum, min and max per hour × event_type — the
+      * O(batch) streaming twin of [[graft.ops.EventOps.incrementalHourly]].
+      * Contract: EXACT — integer counts and decimal sums add
+      * associatively, so any slicing equals the full recompute.
+      */
+    val hourlyAgg = Rollup(
+      Seq(date_trunc("hour", col("ts")).as("hour"), col("event_type"),
+        col("value")),
+      Seq("hour", "event_type"),
+      Seq(count(lit(1)).as("n_events"),
+        sum(col("value").cast(dec)).as("sum_dec"),
+        min("value").as("min_value"), max("value").as("max_value")),
+      Seq(sum("n_events").as("n_events"),
+        sum("sum_dec").cast(dec).as("sum_dec"),
+        min("min_value").as("min_value"), max("max_value").as("max_value")))
+
+    /** HLL sketch of user ids per epoch hour `h` — the partials
+      * [[graft.ops.EventOps.slidingDistinctUsers]] unions into sliding
+      * distinct counts. Contract: BYTE-IDENTICAL — HLL union is a pure
+      * function of the input set.
+      */
+    val hourlyHll = hll(expr("unix_timestamp(ts) div 3600").as("h"), "h")
+
+    /** HLL sketch of user ids per epoch `day` — the partials
+      * [[graft.ops.EventOps.dauWauMauSketch]] consumes; any trailing
+      * DAU/WAU/MAU window is at most 30 stored unions. Contract:
+      * BYTE-IDENTICAL, as [[hourlyHll]].
+      */
+    val dailyHll =
+      hll(expr("unix_micros(ts) div 86400000000").as("day"), "day")
+
+    private def hll(key: Column, name: String) = Rollup(
+      Seq(key, col("user_id")), Seq(name),
+      Seq(expr("hll_sketch_agg(user_id)").as("sk")),
+      Seq(expr("hll_union_agg(sk)").as("sk")))
+
+    /** KLL sketch of `value` per epoch hour `h` — the streaming half of
+      * [[graft.ops.EventOps.quantileRollupDaily]]. Contract: RANK-DOMAIN
+      * — KLL merge is associative in guarantee, not in bits (compaction
+      * is randomized), so any slicing yields quantile estimates within
+      * the sketch's rank tolerance, every value counted once.
+      */
+    val hourlyKll = Rollup(
+      Seq(expr("unix_timestamp(ts) div 3600").as("h"), col("value")),
+      Seq("h"),
+      Seq(expr("kll_sketch_agg_double(value)").as("sk")),
+      Seq(expr("kll_merge_agg_double(sk)").as("sk")))
+
+    /** Theta sketch of user ids per event_type. Theta also intersects,
+      * so stored partials answer pairwise audience overlaps
+      * (`theta_intersection`, [[graft.ops.EventOps.segmentOverlap]]'s
+      * shape). Contract: BYTE-IDENTICAL at exact-regime cardinality —
+      * theta union is a pure function of the input set under the default
+      * seed.
+      */
+    val segmentTheta = Rollup(
+      Seq(col("event_type"), col("user_id")), Seq("event_type"),
+      Seq(expr("theta_sketch_agg(user_id)").as("sk")),
+      Seq(expr("theta_union_agg(sk)").as("sk")))
+
+    /** Count-min sketch of document terms per `lang` (eps 0.001,
+      * confidence 0.99, seed 42), merged by [[graft.functions.CmsUnion]]
+      * (the union SQL lacks); batch twin
+      * [[graft.ops.TextOps.termFreqRollup]]. Contract: BYTE-IDENTICAL —
+      * CMS union adds counters elementwise, so any slicing equals the
+      * direct sketch over the whole stream.
+      */
+    val langCms = Rollup(
+      Seq(col("lang"),
+        explode(graft.ops.TextOps.tokens(lower(col("text")))).as("term")),
+      Seq("lang"),
+      Seq(expr("count_min_sketch(term, 0.001D, 0.99D, 42)").as("cms")),
+      Seq(graft.functions.CmsUnion.cmsUnion(col("cms")).as("cms")))
+
+    /** Count and decimal sum per minute `bucket_ts` — the base of
+      * [[startGrainRollupSink]]'s ladder. Contract: EXACT, as
+      * [[hourlyAgg]].
+      */
+    val grainMinute = Rollup(
+      Seq(date_trunc("minute", col("ts")).as("bucket_ts"), col("value")),
+      Seq("bucket_ts"),
+      Seq(count(lit(1)).as("n_events"),
+        sum(col("value").cast(dec)).as("dec_v")),
+      Seq(sum("n_events").as("n_events"),
+        sum("dec_v").cast(dec).as("dec_v")))
+  }
+
+  /** Keep `rollup`'s state table at `path` up to date from a stream: one
+    * [[applyRollupBatch]] per micro-batch.
+    */
+  def startRollupSink(df: DataFrame, path: String, checkpoint: String,
+      rollup: Rollup): StreamingQuery =
+    startBatchSink(df, checkpoint)(applyRollupBatch(_, path, _, rollup))
+
+  /** One rollup micro-batch (spec-drivable): the batch's partials merged
+    * into the stored table through [[foldTable]]; false on a replay.
+    */
+  private[graft] def applyRollupBatch(batch: DataFrame, path: String,
+      batchId: Long, rollup: Rollup): Boolean =
+    foldTable(batch.sparkSession, path, batchId) { stored =>
+      val partial = rollup.partialOf(batch)
+      stored.fold(partial)(t => rollup.mergeOf(t.unionByName(partial)))
+    }
+
   /** Streaming keyed-upsert sink: per micro-batch, MERGE the batch into a
     * parquet table by key (latest batch wins per key). The engine twin of
     * the Delta `foreachBatch { merge }` pattern — the upgrade path from
@@ -675,63 +834,235 @@ object StreamPipeline {
     * the stream carries updates, not just inserts.
     *
     * Within one batch, several rows may share a key; `orderCol` picks the
-    * survivor deterministically (max wins) BEFORE the merge, and the
-    * [[TableSink.commit]] swap makes table+ledger one atomic unit — a
-    * replayed batch is exactly-once on plain parquet.
-    * At 100 TB the read-merge-rewrite touches only partitions holding
-    * merged keys (see `Relational.mergeUpsert`); here the table rewrites
-    * whole, the fixture shape.
+    * survivor deterministically (max wins) BEFORE the merge, and
+    * [[foldTable]] makes a replayed batch a no-op. At 100 TB the
+    * read-merge-rewrite touches only partitions holding merged keys (see
+    * `Relational.mergeUpsert`); here the table rewrites whole, the
+    * fixture shape.
     */
-  /** Streaming aggregate-maintenance sink: per micro-batch, aggregate the
-    * batch to decomposable partials (count / decimal sum / min / max per
-    * hour × type) and MERGE them into a stored aggregate table — the
-    * O(batch) streaming twin of [[graft.ops.EventOps.incrementalHourly]],
-    * and what the reference's append-only Delta sink would need to become
-    * to serve the batch queries without a daily recompute. State lives in
-    * the table, not the stream (no watermark, no state store): a restart
-    * resumes from the checkpoint and the table, and a REPLAYED micro-batch
-    * is a no-op via the [[TableSink]] batch ledger — counts and sums are
-    * not idempotent under re-merge, so without the ledger a replay would
-    * double-count every group the batch touched.
-    *
-    * Column contract: `merged(old, batch)` sums counts/sums and
-    * min/maxes bounds groupwise — associative + commutative, so ANY batch
-    * slicing of the input events converges to the full-recompute table
-    * (the spec drives three uneven batches and asserts exactly that).
-    */
-  def startHourlyAggSink(events: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyHourlyAggBatch(batch, path, batchId)
-      }
-      .start()
-
-  /** One hourly-agg micro-batch, factored out so the crash-window spec
-    * can drive it directly (same batchId twice, kill mid-swap).
-    */
-  private[graft] def applyHourlyAggBatch(batch: DataFrame, path: String,
-      batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (!TableSink.alreadyApplied(s, path, batchId)) {
-      val partial = batch
-        .groupBy(date_trunc("hour", col("ts")).as("hour"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).as("sum_dec"),
-          min("value").as("min_value"), max("value").as("max_value"))
-      val merged =
-        if (TableSink.hasParquet(s, path))
-          s.read.parquet(path).unionByName(partial)
-            .groupBy("hour", "event_type")
-            .agg(sum("n_events").as("n_events"),
-              sum("sum_dec").cast("decimal(18,2)").as("sum_dec"),
-              min("min_value").as("min_value"),
-              max("max_value").as("max_value"))
-        else partial
-      TableSink.commit(s, path, batchId, merged)
+  def startMergeSink(df: DataFrame, path: String, checkpoint: String,
+      keys: Seq[String], orderCol: String): StreamingQuery =
+    startBatchSink(df, checkpoint) { (batch, batchId) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keys.map(col): _*)
+        .orderBy(col(orderCol).desc)
+      val latest = batch.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      foldTable(batch.sparkSession, path, batchId)(
+        _.fold(latest)(graft.ops.Relational.mergeUpsert(_, latest, keys)))
     }
+
+  /** Self-compacting append sink: each micro-batch appends parquet (the
+    * cheap, exactly-once path), and whenever the accumulated small-file
+    * count exceeds `maxFiles` the sink folds the table back to
+    * ~`targetRecordsPerFile`-row files via [[graft.sources.Sinks
+    * .compactParquet]]. This bounds scan cost at O(bytes), not
+    * O(micro-batches) — the small-files problem every streaming table
+    * hits (the reference's checkpointed append sink, `KINESIS:174-192`,
+    * grows one file per batch per partition forever). Both the count and
+    * the compaction go through the Hadoop FileSystem, so any path scheme
+    * (`file:`, `hdfs://`, `s3a://`) compacts.
+    *
+    * Compaction runs inside foreachBatch, i.e. serialized with appends —
+    * no writer races. At 100 TB the same trigger logic runs per
+    * partition directory with a transaction log making the swap atomic;
+    * the threshold check (a directory listing) is O(files), which is
+    * exactly the quantity being bounded.
+    */
+  def startCompactingSink(df: DataFrame, path: String, checkpoint: String,
+      maxFiles: Int, targetRecordsPerFile: Long): StreamingQuery =
+    startBatchSink(df, checkpoint) { (batch, _) =>
+      val s = batch.sparkSession
+      batch.write.mode("append").parquet(path)
+      if (graft.sources.Sinks.parquetFileCount(s, path) > maxFiles)
+        graft.sources.Sinks.compactParquet(s, path, targetRecordsPerFile)
+    }
+
+  /** Streaming windowed funnel — the streaming twin of
+    * [[graft.ops.EventOps.funnelWindowed]], sharing its step window
+    * [[graft.ops.EventOps.FunnelWindowSec]]: a per-user state TABLE
+    * (user_id, t1, t2, t3) holding the earliest view / qualifying
+    * click / qualifying purchase times, merged per micro-batch through
+    * [[foldTable]] with the greedy cascade evaluated row-locally over
+    * the batch's sorted per-user event arrays.
+    *
+    * Correctness contract: with batches sliced in event-time order
+    * (the append-stream premise every table-state sink here shares),
+    * each stage time is fixed by the first batch that can prove it —
+    * t1 is the global min view (earlier batches hold no views), a
+    * qualifying click has us > t1 so it can only arrive in or after
+    * t1's batch, and likewise down the cascade — so ANY ordered
+    * slicing converges to the batch operator's state; the spec drives
+    * uneven slicings and asserts exact equality of the readout. The
+    * premise is made OBSERVABLE, not assumed: the state table carries
+    * each user's max-seen event time, and a batch whose per-user min
+    * precedes it is counted and loudly logged (late events can have
+    * silently missed a stage window), so a violated contract surfaces
+    * at runtime instead of as a quietly-diverged funnel.
+    * Scale: per batch ONE user-keyed aggregate of the batch slice
+    * (arrays bounded by a user's in-batch activity) + a user-keyed
+    * full-outer merge join against the state table — co-partitioned,
+    * no window, state one row per user ever seen.
+    */
+  def startFunnelSink(events: DataFrame, path: String,
+      checkpoint: String): StreamingQuery =
+    startBatchSink(events, checkpoint)(applyFunnelBatch(_, path, _))
+
+  /** One funnel-state micro-batch merge (spec-drivable). Returns the
+    * number of users this batch delivered OUT of event-time order
+    * (0 when the ordered-slicing contract held, or when the batch was
+    * a replayed no-op).
+    */
+  private[graft] def applyFunnelBatch(batch: DataFrame, path: String,
+      batchId: Long): Long = {
+    val winUs = graft.ops.EventOps.FunnelWindowSec * 1000000L
+    var nOoo = 0L
+    foldTable(batch.sparkSession, path, batchId) { stored =>
+      val per = batch.select(col("user_id"), col("event_type"),
+          expr("unix_micros(ts)").as("us"))
+        .groupBy("user_id")
+        .agg(min(when(col("event_type") === "view", col("us")))
+            .as("bv"),
+          sort_array(collect_list(when(col("event_type") === "click",
+            col("us")))).as("bc"),
+          sort_array(collect_list(when(col("event_type") === "purchase",
+            col("us")))).as("bp"),
+          min(col("us")).as("bmin"), max(col("us")).as("bmax"))
+      val joined = stored.map { t =>
+        // schema forward-compat: a state table written before the
+        // max-seen watermark (or the out-of-order counter) landed
+        // simply starts tracking now
+        val t1 = if (t.columns.contains("max_us")) t
+          else t.withColumn("max_us", lit(null).cast("long"))
+        val t2 = if (t1.columns.contains("ooo_events")) t1
+          else t1.withColumn("ooo_events", lit(0L))
+        t2.join(per, Seq("user_id"), "full_outer")
+      }.getOrElse(per.withColumn("t1", lit(null).cast("long"))
+        .withColumn("t2", lit(null).cast("long"))
+        .withColumn("t3", lit(null).cast("long"))
+        .withColumn("max_us", lit(null).cast("long"))
+        .withColumn("ooo_events", lit(0L))
+      ).localCheckpoint() // consumed by the contract probe AND the merge
+      // the ordered-slicing contract, probed: a user whose batch slice
+      // starts BEFORE their stored max-seen time arrived out of event-
+      // time order — their stage times may have missed qualifying
+      // events, so say so loudly instead of diverging silently
+      val oooFlag = col("bmin").isNotNull &&
+        col("max_us").isNotNull && col("bmin") < col("max_us")
+      nOoo = joined.filter(oooFlag).count()
+      if (nOoo > 0)
+        System.err.println(s"[graft] funnel sink batch $batchId: $nOoo " +
+          "user(s) arrived OUT OF EVENT-TIME ORDER (batch min < stored " +
+          "max-seen) — the ordered-slicing premise is violated and late " +
+          "stage events may have been missed; replay the stream in " +
+          "event-time order to recover exact funnel state")
+      // …and PERSISTED, not just logged (round-11 verdict #4): each
+      // user's cumulative out-of-order arrival count rides in the state
+      // table itself — committed in the SAME atomic swap as the stage
+      // times (no second table, no torn-metrics window; a replayed
+      // batch no-ops through the ledger like every other column), so a
+      // monitoring query (`sum(ooo_events) > 0`) detects the violated
+      // premise without access to driver logs
+      joined
+        .withColumn("t1n", least(col("t1"), col("bv")))
+        .withColumn("t2n", least(col("t2"), expr(
+          s"array_min(filter(bc, x -> x > t1n AND x <= t1n + $winUs))")))
+        .withColumn("t3n", least(col("t3"), expr(
+          s"array_min(filter(bp, x -> x > t2n AND x <= t2n + $winUs))")))
+        .select(col("user_id"), col("t1n").as("t1"),
+          col("t2n").as("t2"), col("t3n").as("t3"),
+          greatest(col("max_us"), col("bmax")).as("max_us"),
+          (coalesce(col("ooo_events"), lit(0L)) +
+            when(oooFlag, 1L).otherwise(0L)).as("ooo_events"))
+    }
+    nOoo
+  }
+
+  /** Monitoring face of the funnel state table's ordered-slicing
+    * contract: total users, users that EVER arrived out of event-time
+    * order, and the summed violation count — the query a dashboard
+    * polls to learn the funnel's premise was violated (nonzero ⇒
+    * replay the stream in event-time order to recover exact state).
+    */
+  def funnelOooReadout(s: SparkSession, path: String): DataFrame = {
+    val st = s.read.parquet(path)
+    val ooo = if (st.columns.contains("ooo_events")) col("ooo_events")
+      else lit(0L)
+    st.agg(count(lit(1)).as("n_users"),
+      sum(when(ooo > 0, 1L).otherwise(0L)).as("n_ooo_users"),
+      sum(ooo).as("n_ooo_events"))
+  }
+
+  /** [[startFunnelSink]]'s readout: the same (stage, n_users,
+    * p50_gap_sec) surface as the batch [[graft.ops.EventOps
+    * .funnelWindowed]], derived from the stored per-user state table —
+    * the spec asserts exact equality after any ordered slicing.
+    */
+  def funnelStateReadout(s: SparkSession, path: String): DataFrame = {
+    import graft.functions.ExactQuantiles.exactQuantiles
+    val st = s.read.parquet(path)
+    val r1 = st.filter(col("t1").isNotNull)
+      .agg(count(lit(1)).as("n_users"))
+      .select(lit("1_view").as("stage"), col("n_users"),
+        lit(null).cast("double").as("p50_gap_sec"))
+    val r2 = st.filter(col("t2").isNotNull)
+      .select((col("t2") - col("t1")).as("gap"))
+      .agg(count(lit(1)).as("n_users"),
+        exactQuantiles(col("gap").cast("double"), Seq(50), 100).as("qs"))
+      .select(lit("2_click").as("stage"), col("n_users"),
+        (col("qs").getItem(0) / 1e6).as("p50_gap_sec"))
+    val r3 = st.filter(col("t3").isNotNull)
+      .select((col("t3") - col("t2")).as("gap"))
+      .agg(count(lit(1)).as("n_users"),
+        exactQuantiles(col("gap").cast("double"), Seq(50), 100).as("qs"))
+      .select(lit("3_purchase").as("stage"), col("n_users"),
+        (col("qs").getItem(0) / 1e6).as("p50_gap_sec"))
+    r1.unionByName(r2).unionByName(r3).orderBy("stage")
+  }
+
+  /** Streaming materialized-view LADDER — the streaming twin of
+    * [[graft.ops.EventOps.grainRollup]]: per micro-batch, the batch's
+    * [[Rollup.grainMinute]] partials merge into the stored minute table
+    * ([[applyRollupBatch]]: ledger-idempotent, so a replayed batch is a
+    * no-op); the hour and day tables are then re-derived FROM THE MINUTE
+    * TABLE with the same merge aggregates — never from raw events, which
+    * each enter exactly one batch aggregate, once. At 100 TB the
+    * hour/day rewrites read the minute PARTIALS (|minutes| rows, not
+    * |events|) and the minute table is partitioned by day so each batch
+    * rewrites only the days it touched.
+    *
+    * Exactly-once: the hour/day tables are PURE FUNCTIONS of the minute
+    * table and are re-derived on every batch call — including replays —
+    * so a crash anywhere between the minute commit and the derived
+    * rewrites heals on the replay the checkpoint guarantees (a replayed
+    * batch skips the merge, then re-derives the grains idempotently).
+    */
+  def startGrainRollupSink(events: DataFrame, basePath: String,
+      checkpoint: String): StreamingQuery =
+    startBatchSink(events, checkpoint)(applyGrainRollupBatch(_, basePath, _))
+
+  /** One grain-rollup micro-batch (spec-drivable): atomic minute-table
+    * merge, then idempotent hour/day re-derivation.
+    */
+  private[graft] def applyGrainRollupBatch(batch: DataFrame,
+      basePath: String, batchId: Long): Unit = {
+    val s = batch.sparkSession
+    applyRollupBatch(batch, basePath + "/minute", batchId,
+      Rollup.grainMinute)
+    // ladder: coarser grains re-aggregate the stored partials — OUTSIDE
+    // the ledger guard, because they must also heal when a replayed
+    // batch finds the minute commit already applied but the derived
+    // rewrites were lost to the crash. Each rewrite goes through the
+    // same stage+swap as the minute commit (a plain overwrite has a
+    // mid-write window where a crash leaves a CORRUPT derived table
+    // that no replay heals once the batch is checkpointed — the swap
+    // leaves old-or-new, never half); being pure functions of the
+    // minute table, the marker's batch id is observability only.
+    def regrain(from: String, grain: String) = Rollup.grainMinute.mergeOf(
+      s.read.parquet(s"$basePath/$from")
+        .withColumn("bucket_ts", date_trunc(grain, col("bucket_ts"))))
+    TableSink.commit(s, basePath + "/hour", batchId, regrain("minute", "hour"))
+    TableSink.commit(s, basePath + "/day", batchId, regrain("hour", "day"))
   }
 
   /** Streaming near-dup admission gate: each micro-batch's documents are
@@ -1146,499 +1477,5 @@ object StreamPipeline {
     val applied = gateManifest(s, indexPath)
     if (applied.isEmpty) Seq.empty[(Long, Long)].toDF("doc_id", "h")
     else readSegments(s, indexPath, "seg", applied)
-  }
-
-  def startMergeSink(df: DataFrame, path: String, checkpoint: String,
-      keys: Seq[String], orderCol: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        if (!TableSink.alreadyApplied(s, path, batchId)) {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(keys.map(col): _*)
-            .orderBy(col(orderCol).desc)
-          val latest = batch
-            .withColumn("__rn", org.apache.spark.sql.functions.row_number.over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-          val merged =
-            if (TableSink.hasParquet(s, path))
-              graft.ops.Relational.mergeUpsert(s.read.parquet(path), latest, keys)
-            else latest
-          // atomic stage+swap: the merge reads the table being replaced
-          // (the live dir stays intact until the staged write completes)
-          // and the batch marker travels inside the swapped directory
-          TableSink.commit(s, path, batchId, merged)
-        }
-      }
-      .start()
-
-  /** Self-compacting append sink: each micro-batch appends parquet (the
-    * cheap, exactly-once path), and whenever the accumulated small-file
-    * count exceeds `maxFiles` the sink folds the table back to
-    * ~`targetRecordsPerFile`-row files via [[graft.sources.Sinks
-    * .compactParquet]]. This bounds scan cost at O(bytes), not
-    * O(micro-batches) — the small-files problem every streaming table
-    * hits (the reference's checkpointed append sink, `KINESIS:174-192`,
-    * grows one file per batch per partition forever).
-    *
-    * Compaction runs inside foreachBatch, i.e. serialized with appends —
-    * no writer races. At 100 TB the same trigger logic runs per
-    * partition directory with a transaction log making the swap atomic;
-    * the threshold check (a directory listing) is O(files), which is
-    * exactly the quantity being bounded.
-    */
-  def startCompactingSink(df: DataFrame, path: String, checkpoint: String,
-      maxFiles: Int, targetRecordsPerFile: Long): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(path)
-        val files = Option(new java.io.File(path).listFiles())
-          .getOrElse(Array.empty)
-          .count(_.getName.endsWith(".parquet"))
-        if (files > maxFiles) {
-          graft.sources.Sinks.compactParquet(
-            batch.sparkSession, path, targetRecordsPerFile)
-          ()
-        }
-      }
-      .start()
-
-  /** Streaming hourly HLL sketch table — the streaming twin of
-    * [[graft.ops.EventOps.slidingDistinctUsers]]'s partials: each
-    * micro-batch sketches ITS rows per hour (`hll_sketch_agg`) and
-    * unions them into the stored hourly sketch table
-    * (`hll_union_agg` over stored ∪ batch — sketch union is
-    * set-associative, the sketch world's version of the decimal-sum
-    * discipline: ANY batch slicing converges to the batch operator's
-    * sketches, spec-proven). Exactly-once via [[TableSink.commit]]'s
-    * atomic table+ledger swap. Raw user ids enter exactly one batch
-    * sketch; restarts resume from checkpoint + tables; any consumer
-    * derives sliding-window distinct estimates by unioning the stored
-    * hourly partials — without ever re-reading events.
-    */
-  def startDistinctSketchSink(events: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDistinctSketchBatch(batch, path, batchId)
-      }
-      .start()
-
-  /** Streaming hourly KLL value-quantile sketch table — the QUANTILE
-    * twin of [[startDistinctSketchSink]] and the streaming half of
-    * [[graft.ops.EventOps.quantileRollupDaily]]: each micro-batch
-    * sketches ITS rows per hour (`kll_sketch_agg_double`) and merges
-    * them into the stored hourly table (`kll_merge_agg_double` over
-    * stored ∪ batch). KLL merge is associative in GUARANTEE, not in
-    * bits (compaction is randomized), so the convergence contract is
-    * rank-domain: any batch slicing yields stored sketches whose
-    * quantile estimates sit within the rank tolerance of the exact
-    * values (spec-asserted), and raw values enter exactly one batch
-    * sketch. Exactly-once via [[TableSink.commit]]'s atomic swap;
-    * consumers derive any grain's quantiles by merging stored hourly
-    * partials without re-reading events.
-    */
-  def startQuantileSketchSink(events: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyQuantileSketchBatch(batch, path, batchId)
-      }
-      .start()
-
-  /** One KLL-sketch-maintenance micro-batch (spec-drivable). */
-  private[graft] def applyQuantileSketchBatch(batch: DataFrame,
-      path: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (!TableSink.alreadyApplied(s, path, batchId)) {
-      val partial = batch
-        .groupBy(expr("unix_timestamp(ts) div 3600").as("h"))
-        .agg(expr("kll_sketch_agg_double(value)").as("sk"))
-      val merged =
-        if (TableSink.hasParquet(s, path))
-          s.read.parquet(path).unionByName(partial)
-            .groupBy("h")
-            .agg(expr("kll_merge_agg_double(sk)").as("sk"))
-        else partial
-      TableSink.commit(s, path, batchId, merged)
-    }
-  }
-
-  /** Streaming per-segment THETA sketch table — the set-operation twin
-    * of [[startDistinctSketchSink]] (HLL unions; theta also
-    * INTERSECTS): per micro-batch, one `theta_sketch_agg(user_id)`
-    * partial per event_type, unioned into the stored table
-    * (`theta_union_agg` — theta update/union is a pure function of the
-    * input SET under the fixed default seed, so any batch slicing
-    * converges to the batch operator's sketches, byte-identically at
-    * exact-regime cardinality). Consumers answer any pairwise audience
-    * overlap from |types| stored partials
-    * (`theta_intersection`, [[graft.ops.EventOps.segmentOverlap]]'s
-    * shape) without ever re-reading events. Exactly-once via
-    * [[TableSink.commit]].
-    */
-  def startSegmentSketchSink(events: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applySegmentSketchBatch(batch, path, batchId)
-      }
-      .start()
-
-  /** One theta-sketch-maintenance micro-batch (spec-drivable). */
-  private[graft] def applySegmentSketchBatch(batch: DataFrame,
-      path: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (!TableSink.alreadyApplied(s, path, batchId)) {
-      val partial = batch
-        .groupBy("event_type")
-        .agg(expr("theta_sketch_agg(user_id)").as("sk"))
-      val merged =
-        if (TableSink.hasParquet(s, path))
-          s.read.parquet(path).unionByName(partial)
-            .groupBy("event_type")
-            .agg(expr("theta_union_agg(sk)").as("sk"))
-        else partial
-      TableSink.commit(s, path, batchId, merged)
-    }
-  }
-
-  /** Streaming per-shard CMS term-frequency sketch table — the
-    * FREQUENCY member completing the streaming sketch family (HLL
-    * distinct / KLL quantile / theta set-op sinks above; batch twin
-    * [[graft.ops.TextOps.termFreqRollup]]): per micro-batch, one
-    * `count_min_sketch` partial per language over the batch's tokens,
-    * unioned into the stored per-shard table via
-    * [[graft.functions.CmsUnion]] (the merge half SQL lacks). CMS
-    * union is elementwise COUNTER ADDITION — deterministic, unlike
-    * KLL's randomized compaction — so the stored sketches are
-    * BYTE-identical to the direct sketch over the concatenated stream
-    * under ANY batch slicing: the strongest convergence contract of
-    * the four, spec-pinned. Exactly-once via [[TableSink.commit]]'s
-    * atomic table+ledger swap; consumers answer frequency queries at
-    * any shard grouping by unioning stored partials, never re-reading
-    * documents.
-    */
-  def startCmsSketchSink(docs: DataFrame, path: String,
-      checkpoint: String, eps: Double = 0.001): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCmsSketchBatch(batch, path, batchId, eps)
-      }
-      .start()
-
-  /** One CMS-sketch-maintenance micro-batch (spec-drivable). */
-  private[graft] def applyCmsSketchBatch(batch: DataFrame, path: String,
-      batchId: Long, eps: Double = 0.001): Unit = {
-    val s = batch.sparkSession
-    if (!TableSink.alreadyApplied(s, path, batchId)) {
-      import graft.functions.CmsUnion.cmsUnion
-      val partial = batch
-        .select(col("lang"),
-          explode(graft.ops.TextOps.tokens(lower(col("text")))).as("term"))
-        .groupBy("lang")
-        .agg(expr(s"count_min_sketch(term, ${eps}D, 0.99D, 42)").as("cms"))
-      val merged =
-        if (TableSink.hasParquet(s, path))
-          s.read.parquet(path).unionByName(partial)
-            .groupBy("lang")
-            .agg(cmsUnion(col("cms")).as("cms"))
-        else partial
-      TableSink.commit(s, path, batchId, merged)
-    }
-  }
-
-  /** One sketch-maintenance micro-batch (spec-drivable). */
-  private[graft] def applyDistinctSketchBatch(batch: DataFrame,
-      path: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (!TableSink.alreadyApplied(s, path, batchId)) {
-      val partial = batch
-        .groupBy(expr("unix_timestamp(ts) div 3600").as("h"))
-        .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-      val merged =
-        if (TableSink.hasParquet(s, path))
-          s.read.parquet(path).unionByName(partial)
-            .groupBy("h")
-            .agg(expr("hll_union_agg(sk)").as("sk"))
-        else partial
-      TableSink.commit(s, path, batchId, merged)
-    }
-  }
-
-  /** Streaming DAILY HLL active-user sketch table — the incremental
-    * producer of the partials [[graft.ops.EventOps.dauWauMauSketch]]
-    * consumes, closing the growth family's batch/streaming loop the
-    * way the KLL/theta/CMS families already close theirs: each
-    * micro-batch sketches ITS rows per day (`hll_sketch_agg`) and
-    * unions them into the stored daily table. HLL union is a pure
-    * function of the input SET, so ANY batch slicing (and any replay —
-    * ledger-idempotent via [[TableSink.commit]]) converges to the
-    * batch operator's daily sketches byte-for-byte; a DAU/WAU/MAU
-    * dashboard then answers every trailing window by unioning ≤ 30
-    * stored day sketches without ever re-reading events.
-    */
-  /** Streaming windowed funnel — the streaming twin of
-    * [[graft.ops.EventOps.funnelWindowed]]: a per-user state TABLE
-    * (user_id, t1, t2, t3) holding the earliest view / qualifying
-    * click / qualifying purchase times, merged per micro-batch with
-    * the greedy cascade evaluated row-locally over the batch's sorted
-    * per-user event arrays. State lives in a table, not the state
-    * store (the [[startGrainRollupSink]] discipline): restart resumes
-    * from checkpoint + table, and [[TableSink.commit]]'s ledger makes
-    * replayed batches no-ops.
-    *
-    * Correctness contract: with batches sliced in event-time order
-    * (the append-stream premise every table-state sink here shares),
-    * each stage time is fixed by the first batch that can prove it —
-    * t1 is the global min view (earlier batches hold no views), a
-    * qualifying click has us > t1 so it can only arrive in or after
-    * t1's batch, and likewise down the cascade — so ANY ordered
-    * slicing converges to the batch operator's state; the spec drives
-    * uneven slicings and asserts exact equality of the readout. The
-    * premise is made OBSERVABLE, not assumed: the state table carries
-    * each user's max-seen event time, and a batch whose per-user min
-    * precedes it is counted and loudly logged (late events can have
-    * silently missed a stage window), so a violated contract surfaces
-    * at runtime instead of as a quietly-diverged funnel.
-    * Scale: per batch ONE user-keyed aggregate of the batch slice
-    * (arrays bounded by a user's in-batch activity) + a user-keyed
-    * full-outer merge join against the state table — co-partitioned,
-    * no window, state one row per user ever seen.
-    */
-  def startFunnelSink(events: DataFrame, path: String,
-      checkpoint: String, windowSec: Long = 86400L): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyFunnelBatch(batch, path, batchId, windowSec): Unit
-      }
-      .start()
-
-  /** One funnel-state micro-batch merge (spec-drivable). Returns the
-    * number of users this batch delivered OUT of event-time order
-    * (0 when the ordered-slicing contract held, or when the batch was
-    * a replayed no-op).
-    */
-  private[graft] def applyFunnelBatch(batch: DataFrame, path: String,
-      batchId: Long, windowSec: Long = 86400L): Long = {
-    val s = batch.sparkSession
-    if (TableSink.alreadyApplied(s, path, batchId)) 0L
-    else {
-      val winUs = windowSec * 1000000L
-      val per = batch.select(col("user_id"), col("event_type"),
-          expr("unix_micros(ts)").as("us"))
-        .groupBy("user_id")
-        .agg(min(when(col("event_type") === "view", col("us")))
-            .as("bv"),
-          sort_array(collect_list(when(col("event_type") === "click",
-            col("us")))).as("bc"),
-          sort_array(collect_list(when(col("event_type") === "purchase",
-            col("us")))).as("bp"),
-          min(col("us")).as("bmin"), max(col("us")).as("bmax"))
-      val prev =
-        if (TableSink.hasParquet(s, path)) {
-          val t = s.read.parquet(path)
-          // schema forward-compat: a state table written before the
-          // max-seen watermark (or the out-of-order counter) landed
-          // simply starts tracking now
-          val t1 = if (t.columns.contains("max_us")) t
-            else t.withColumn("max_us", lit(null).cast("long"))
-          if (t1.columns.contains("ooo_events")) t1
-          else t1.withColumn("ooo_events", lit(0L))
-        } else null
-      val joined = (
-        if (prev != null) prev.join(per, Seq("user_id"), "full_outer")
-        else per.withColumn("t1", lit(null).cast("long"))
-          .withColumn("t2", lit(null).cast("long"))
-          .withColumn("t3", lit(null).cast("long"))
-          .withColumn("max_us", lit(null).cast("long"))
-          .withColumn("ooo_events", lit(0L))
-      ).localCheckpoint() // consumed by the contract probe AND the merge
-      // the ordered-slicing contract, probed: a user whose batch slice
-      // starts BEFORE their stored max-seen time arrived out of event-
-      // time order — their stage times may have missed qualifying
-      // events, so say so loudly instead of diverging silently
-      val oooFlag = col("bmin").isNotNull &&
-        col("max_us").isNotNull && col("bmin") < col("max_us")
-      val nOoo = joined.filter(oooFlag).count()
-      if (nOoo > 0)
-        System.err.println(s"[graft] funnel sink batch $batchId: $nOoo " +
-          "user(s) arrived OUT OF EVENT-TIME ORDER (batch min < stored " +
-          "max-seen) — the ordered-slicing premise is violated and late " +
-          "stage events may have been missed; replay the stream in " +
-          "event-time order to recover exact funnel state")
-      // …and PERSISTED, not just logged (round-11 verdict #4): each
-      // user's cumulative out-of-order arrival count rides in the state
-      // table itself — committed in the SAME atomic swap as the stage
-      // times (no second table, no torn-metrics window; a replayed
-      // batch no-ops through the ledger like every other column), so a
-      // monitoring query (`sum(ooo_events) > 0`) detects the violated
-      // premise without access to driver logs
-      val merged = joined
-        .withColumn("t1n", least(col("t1"), col("bv")))
-        .withColumn("t2n", least(col("t2"), expr(
-          s"array_min(filter(bc, x -> x > t1n AND x <= t1n + $winUs))")))
-        .withColumn("t3n", least(col("t3"), expr(
-          s"array_min(filter(bp, x -> x > t2n AND x <= t2n + $winUs))")))
-        .select(col("user_id"), col("t1n").as("t1"),
-          col("t2n").as("t2"), col("t3n").as("t3"),
-          greatest(col("max_us"), col("bmax")).as("max_us"),
-          (coalesce(col("ooo_events"), lit(0L)) +
-            when(oooFlag, 1L).otherwise(0L)).as("ooo_events"))
-      TableSink.commit(s, path, batchId, merged)
-      nOoo
-    }
-  }
-
-  /** Monitoring face of the funnel state table's ordered-slicing
-    * contract: total users, users that EVER arrived out of event-time
-    * order, and the summed violation count — the query a dashboard
-    * polls to learn the funnel's premise was violated (nonzero ⇒
-    * replay the stream in event-time order to recover exact state).
-    */
-  def funnelOooReadout(s: SparkSession, path: String): DataFrame = {
-    val st = s.read.parquet(path)
-    val ooo = if (st.columns.contains("ooo_events")) col("ooo_events")
-      else lit(0L)
-    st.agg(count(lit(1)).as("n_users"),
-      sum(when(ooo > 0, 1L).otherwise(0L)).as("n_ooo_users"),
-      sum(ooo).as("n_ooo_events"))
-  }
-
-  /** [[startFunnelSink]]'s readout: the same (stage, n_users,
-    * p50_gap_sec) surface as the batch [[graft.ops.EventOps
-    * .funnelWindowed]], derived from the stored per-user state table —
-    * the spec asserts exact equality after any ordered slicing.
-    */
-  def funnelStateReadout(s: SparkSession, path: String): DataFrame = {
-    import graft.functions.ExactQuantiles.exactQuantiles
-    val st = s.read.parquet(path)
-    val r1 = st.filter(col("t1").isNotNull)
-      .agg(count(lit(1)).as("n_users"))
-      .select(lit("1_view").as("stage"), col("n_users"),
-        lit(null).cast("double").as("p50_gap_sec"))
-    val r2 = st.filter(col("t2").isNotNull)
-      .select((col("t2") - col("t1")).as("gap"))
-      .agg(count(lit(1)).as("n_users"),
-        exactQuantiles(col("gap").cast("double"), Seq(50), 100).as("qs"))
-      .select(lit("2_click").as("stage"), col("n_users"),
-        (col("qs").getItem(0) / 1e6).as("p50_gap_sec"))
-    val r3 = st.filter(col("t3").isNotNull)
-      .select((col("t3") - col("t2")).as("gap"))
-      .agg(count(lit(1)).as("n_users"),
-        exactQuantiles(col("gap").cast("double"), Seq(50), 100).as("qs"))
-      .select(lit("3_purchase").as("stage"), col("n_users"),
-        (col("qs").getItem(0) / 1e6).as("p50_gap_sec"))
-    r1.unionByName(r2).unionByName(r3).orderBy("stage")
-  }
-
-  def startDauSketchSink(events: DataFrame, path: String,
-      checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyDauSketchBatch(batch, path, batchId)
-      }
-      .start()
-
-  /** One daily-HLL-maintenance micro-batch (spec-drivable). */
-  private[graft] def applyDauSketchBatch(batch: DataFrame,
-      path: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    if (!TableSink.alreadyApplied(s, path, batchId)) {
-      val partial = batch
-        .groupBy(expr("unix_micros(ts) div 86400000000").as("day"))
-        .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-      val merged =
-        if (TableSink.hasParquet(s, path))
-          s.read.parquet(path).unionByName(partial)
-            .groupBy("day")
-            .agg(expr("hll_union_agg(sk)").as("sk"))
-        else partial
-      TableSink.commit(s, path, batchId, merged)
-    }
-  }
-
-  /** Streaming materialized-view LADDER — the streaming twin of
-    * [[graft.ops.EventOps.grainRollup]]: per micro-batch, the batch's
-    * MINUTE-grain partials (count + DECIMAL sum, decomposable) merge
-    * into the stored minute table (ledger-idempotent, so a replayed
-    * batch is a no-op); the hour and day tables are then re-derived
-    * FROM THE MINUTE TABLE — never from raw events, which each enter
-    * exactly one batch aggregate, once.
-    *
-    * State lives in tables, not the state store (no watermark, no
-    * unbounded keyed state): a restart resumes from the checkpoint +
-    * tables. Because the partials are associative/commutative, ANY
-    * batch slicing of the stream converges to the batch operator's
-    * table — the spec drives uneven batches and asserts exactly that.
-    * At 100 TB the hour/day rewrites read the minute PARTIALS
-    * (|minutes| rows, not |events|) and the minute table is partitioned
-    * by day so each batch rewrites only the days it touched.
-    *
-    * Exactly-once: the minute table (the only merge-shaped state)
-    * commits via [[TableSink.commit]]'s atomic table+ledger swap; the
-    * hour/day tables are PURE FUNCTIONS of the minute table and are
-    * re-derived on every batch call — including replays — so a crash
-    * anywhere between the minute commit and the derived rewrites heals
-    * on the replay the checkpoint guarantees (a replayed batch skips
-    * the merge, then re-derives the grains idempotently).
-    */
-  def startGrainRollupSink(events: DataFrame, basePath: String,
-      checkpoint: String): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyGrainRollupBatch(batch, basePath, batchId)
-      }
-      .start()
-
-  /** One grain-rollup micro-batch (spec-drivable): atomic minute-table
-    * merge, then idempotent hour/day re-derivation.
-    */
-  private[graft] def applyGrainRollupBatch(batch: DataFrame,
-      basePath: String, batchId: Long): Unit = {
-    val s = batch.sparkSession
-    val minutePath = basePath + "/minute"
-    if (!TableSink.alreadyApplied(s, minutePath, batchId)) {
-      val partial = batch
-        .groupBy(date_trunc("minute", col("ts")).as("bucket_ts"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).as("dec_v"))
-      val minute =
-        if (TableSink.hasParquet(s, minutePath))
-          s.read.parquet(minutePath).unionByName(partial)
-            .groupBy("bucket_ts")
-            .agg(sum("n_events").as("n_events"),
-              sum("dec_v").cast("decimal(18,2)").as("dec_v"))
-        else partial
-      TableSink.commit(s, minutePath, batchId, minute)
-    }
-    // ladder: coarser grains re-aggregate the stored partials — OUTSIDE
-    // the ledger guard, because they must also heal when a replayed
-    // batch finds the minute commit already applied but the derived
-    // rewrites were lost to the crash. Each rewrite goes through the
-    // same stage+swap as the minute commit (a plain overwrite has a
-    // mid-write window where a crash leaves a CORRUPT derived table
-    // that no replay heals once the batch is checkpointed — the swap
-    // leaves old-or-new, never half); being pure functions of the
-    // minute table, the marker's batch id is observability only.
-    val m = s.read.parquet(minutePath)
-    TableSink.commit(s, basePath + "/hour", batchId,
-      m.groupBy(date_trunc("hour", col("bucket_ts")).as("bucket_ts"))
-        .agg(sum("n_events").as("n_events"),
-          sum("dec_v").cast("decimal(18,2)").as("dec_v")))
-    TableSink.commit(s, basePath + "/day", batchId,
-      s.read.parquet(basePath + "/hour")
-        .groupBy(date_trunc("day", col("bucket_ts")).as("bucket_ts"))
-        .agg(sum("n_events").as("n_events"),
-          sum("dec_v").cast("decimal(18,2)").as("dec_v")))
   }
 }

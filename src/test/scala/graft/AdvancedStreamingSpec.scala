@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamPipeline
-import graft.streaming.StreamPipeline.SessionEvent
+import graft.streaming.StreamPipeline.{Rollup, SessionEvent}
 
 /** Specs for the arbitrary-state and stream-stream-join extensions. */
 class AdvancedStreamingSpec extends AnyFunSuite {
@@ -682,8 +682,9 @@ class AdvancedStreamingSpec extends AnyFunSuite {
       (t(2, 0), "click", 4.0), (t(2, 30), "buy", 20.0),
       (t(2, 31), "buy", 0.5))
     val mem = MemoryStream[(Timestamp, String, Double)](spark)
-    val q = StreamPipeline.startHourlyAggSink(
-      mem.toDF().toDF("ts", "event_type", "value"), table, s"$dir/ckpt")
+    val q = StreamPipeline.startRollupSink(
+      mem.toDF().toDF("ts", "event_type", "value"), table, s"$dir/ckpt",
+      Rollup.hourlyAgg)
     try {
       // uneven slicing, hour 1 and hour 2 both split across batches
       mem.addData(events(0), events(1))
@@ -764,8 +765,9 @@ class AdvancedStreamingSpec extends AnyFunSuite {
       (t(2, 0), 100L), (t(2, 30), 102L), (t(2, 45), 103L),
       (t(2, 50), 101L))
     val mem = MemoryStream[(Timestamp, Long)](spark)
-    val q = StreamPipeline.startDistinctSketchSink(
-      mem.toDF().toDF("ts", "user_id"), path, s"$dir/ckpt")
+    val q = StreamPipeline.startRollupSink(
+      mem.toDF().toDF("ts", "user_id"), path, s"$dir/ckpt",
+      Rollup.hourlyHll)
     try {
       mem.addData(events(0), events(1)); q.processAllAvailable()
       mem.addData(events(2), events(3), events(4)); q.processAllAvailable()
@@ -800,8 +802,9 @@ class AdvancedStreamingSpec extends AnyFunSuite {
       (day(2, 0), 100L), (day(2, 9), 102L),
       (day(3, 3), 103L), (day(3, 4), 101L), (day(3, 5), 100L))
     val mem = MemoryStream[(Timestamp, Long)](spark)
-    val q = StreamPipeline.startDauSketchSink(
-      mem.toDF().toDF("ts", "user_id"), path, s"$dir/ckpt")
+    val q = StreamPipeline.startRollupSink(
+      mem.toDF().toDF("ts", "user_id"), path, s"$dir/ckpt",
+      Rollup.dailyHll)
     try {
       // uneven slicing: day 1 split across batches, day 2+3 mixed
       mem.addData(events(0), events(1)); q.processAllAvailable()
@@ -827,6 +830,61 @@ class AdvancedStreamingSpec extends AnyFunSuite {
         .getLong(0)
       assert(wauEst === 4L)
     } finally q.stop()
+  }
+
+  test("KLL, theta and CMS rollups run as streams: startRollupSink on a " +
+      "MemoryStream stores the tables applyRollupBatch builds over the " +
+      "same slices") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("rollup_sinks").toString
+    val rows = (1 to 30).map(i => (t(i % 3, i % 60), s"type_${i % 2}",
+      i * 1.5, (i % 7).toLong, s"lang_${i % 2}", s"alpha beta word${i % 5}"))
+    val cols = Seq("ts", "event_type", "value", "user_id", "lang", "text")
+    val slices = Seq(rows.take(4), rows.slice(4, 19), rows.drop(19))
+    val rollups = Seq("kll" -> Rollup.hourlyKll,
+      "theta" -> Rollup.segmentTheta, "cms" -> Rollup.langCms)
+    // one source per query: a MemoryStream drops data its reader commits
+    val streams = rollups.map { case (name, r) =>
+      val mem = MemoryStream[(Timestamp, String, Double, Long, String,
+        String)](spark)
+      mem -> StreamPipeline.startRollupSink(mem.toDF().toDF(cols: _*),
+        s"$dir/stream_$name", s"$dir/ckpt_$name", r)
+    }
+    try slices.foreach { sl =>
+      streams.foreach { case (mem, q) =>
+        mem.addData(sl)
+        q.processAllAvailable()
+      }
+    } finally streams.foreach(_._2.stop())
+    slices.zipWithIndex.foreach { case (sl, i) =>
+      rollups.foreach { case (name, r) =>
+        StreamPipeline.applyRollupBatch(sl.toDF(cols: _*),
+          s"$dir/batch_$name", i.toLong, r)
+      }
+    }
+    // theta and CMS bytes are order-free; KLL's level-0 bytes keep merge
+    // order, so compare what a KLL sketch answers: its count and, below
+    // its compaction size, exact quantiles at every probed rank
+    def contents(path: String, name: String): Seq[String] = {
+      val t = spark.read.parquet(path)
+      val (key, sk) = (t.columns(0), t.columns(1))
+      val shown =
+        if (name == "kll") s"kll_sketch_get_n_double($sk)" +:
+          Seq(0.1, 0.3, 0.5, 0.7, 0.9, 1.0)
+            .map(r => s"kll_sketch_get_quantile_double($sk, $r)")
+        else Seq(s"hex($sk)")
+      t.selectExpr(key +: shown: _*).collect().map(_.mkString("|"))
+        .toSeq.sorted
+    }
+    rollups.foreach { case (name, _) =>
+      assert(graft.streaming.TableSink.listVersions(spark,
+        s"$dir/stream_$name") === Seq(0L, 1L, 2L),
+        s"$name: each slice must be one micro-batch")
+      val streamed = contents(s"$dir/stream_$name", name)
+      assert(streamed.nonEmpty)
+      assert(streamed === contents(s"$dir/batch_$name", name),
+        s"$name: the streamed table diverged from the batch-driven one")
+    }
   }
 
   test("fMGWS sessionization and a LATE group: with EventTimeTimeout the " +

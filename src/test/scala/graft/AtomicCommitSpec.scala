@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{StreamPipeline, TableSink}
+import graft.streaming.StreamPipeline.Rollup
 
 /** The foreachBatch exactly-once contract on plain parquet: table content
   * and batch ledger commit as ONE atomic swap ([[TableSink.commit]] — the
@@ -98,8 +99,8 @@ class AtomicCommitSpec extends AnyFunSuite {
       "and a replay is a no-op — the formerly-open double-merge window") {
     val path = tmpDir() + "/hourly"
     val b = eventsBatch(12)
-    StreamPipeline.applyHourlyAggBatch(b, path, 0)
-    StreamPipeline.applyHourlyAggBatch(b, path, 1)
+    StreamPipeline.applyRollupBatch(b, path, 0, Rollup.hourlyAgg)
+    StreamPipeline.applyRollupBatch(b, path, 1, Rollup.hourlyAgg)
     val committed = spark.read.parquet(path)
       .agg(sum("n_events")).collect()(0).getLong(0)
     // reproduce the exact crash state between the aside-rename and the
@@ -114,7 +115,7 @@ class AtomicCommitSpec extends AnyFunSuite {
     assert(spark.read.parquet(path)
       .agg(sum("n_events")).collect()(0).getLong(0) == committed)
     // the replay the checkpoint would drive after the crash: no-op
-    StreamPipeline.applyHourlyAggBatch(b, path, 1)
+    StreamPipeline.applyRollupBatch(b, path, 1, Rollup.hourlyAgg)
     assert(spark.read.parquet(path)
       .agg(sum("n_events")).collect()(0).getLong(0) == committed,
       "replay after recovery double-merged the batch")
@@ -165,14 +166,14 @@ class AtomicCommitSpec extends AnyFunSuite {
       "and the batch re-applies in full") {
     val path = tmpDir() + "/hourly"
     val b = eventsBatch(12)
-    StreamPipeline.applyHourlyAggBatch(b, path, 0)
+    StreamPipeline.applyRollupBatch(b, path, 0, Rollup.hourlyAgg)
     val committed = spark.read.parquet(path)
       .agg(sum("n_events")).collect()(0).getLong(0)
     // crash during batch 1's stage write: stage exists, no marker yet
     import spark.implicits._
     Seq((999L, 999L)).toDF("x", "y").write.parquet(path + "__stage")
     assert(!TableSink.alreadyApplied(spark, path, 1))
-    StreamPipeline.applyHourlyAggBatch(b, path, 1)
+    StreamPipeline.applyRollupBatch(b, path, 1, Rollup.hourlyAgg)
     assert(TableSink.alreadyApplied(spark, path, 1))
     assert(spark.read.parquet(path)
       .agg(sum("n_events")).collect()(0).getLong(0) == 2 * committed,
@@ -184,32 +185,84 @@ class AtomicCommitSpec extends AnyFunSuite {
 
   test("replay idempotence across all three atomic sinks: same batchId " +
       "twice changes nothing; a new batchId merges exactly once") {
+    import spark.implicits._
     val base = tmpDir()
-    val b = eventsBatch(18)
-    // hourly agg
-    StreamPipeline.applyHourlyAggBatch(b, base + "/agg", 0)
-    val agg0 = spark.read.parquet(base + "/agg")
-      .agg(sum("n_events")).collect()(0).getLong(0)
-    StreamPipeline.applyHourlyAggBatch(b, base + "/agg", 0)
-    assert(spark.read.parquet(base + "/agg")
-      .agg(sum("n_events")).collect()(0).getLong(0) == agg0)
-    // sketch table: estimates must not move on replay
-    StreamPipeline.applyDistinctSketchBatch(b, base + "/sk", 0)
-    val est0 = spark.read.parquet(base + "/sk")
-      .selectExpr("h", "hll_sketch_estimate(sk) AS e").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    StreamPipeline.applyDistinctSketchBatch(b, base + "/sk", 0)
-    val est1 = spark.read.parquet(base + "/sk")
-      .selectExpr("h", "hll_sketch_estimate(sk) AS e").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(est1 == est0)
-    // grain rollup
-    StreamPipeline.applyGrainRollupBatch(b, base + "/grain", 0)
-    val m0 = spark.read.parquet(base + "/grain/minute")
-      .agg(sum("n_events")).collect()(0).getLong(0)
-    StreamPipeline.applyGrainRollupBatch(b, base + "/grain", 0)
-    assert(spark.read.parquet(base + "/grain/minute")
-      .agg(sum("n_events")).collect()(0).getLong(0) == m0)
+    // every ledger-guarded table: the six rollups, the grain ladder's
+    // minute table, the funnel state and (below) the keyed upsert. One
+    // frame carries all their input columns; the second batch brings new
+    // hours, users, values and terms, so every table must move.
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    def batch(from: Int) = (from until from + 18).map(i =>
+      (new java.sql.Timestamp(t0 + i * 7 * 60000L),
+        Seq("view", "click", "purchase")(i % 3), i + 0.25,
+        (i / 3 % 4 + from).toLong, s"lang_${i % 2}", s"alpha beta word$i"))
+      .toDF("ts", "event_type", "value", "user_id", "lang", "text")
+    // the stored table as sorted rows, sketch columns as hex
+    def snapshot(path: String): Seq[String] = {
+      val t = spark.read.parquet(path)
+      t.select(t.schema.fields.toSeq.map(f =>
+          if (f.dataType == org.apache.spark.sql.types.BinaryType)
+            hex(col(f.name))
+          else col(f.name).cast("string")): _*)
+        .collect().map(_.mkString("|")).toSeq.sorted
+    }
+    def replayCheck(path: String)(
+        apply: (org.apache.spark.sql.DataFrame, Long) => Any): Unit = {
+      apply(batch(0), 0L)
+      val v0 = snapshot(path)
+      apply(batch(0), 0L)
+      assert(snapshot(path) === v0, s"$path: a replayed batchId moved it")
+      apply(batch(100), 1L)
+      assert(snapshot(path) !== v0, s"$path: the next batchId did not")
+    }
+    Seq("agg" -> Rollup.hourlyAgg, "hll_hour" -> Rollup.hourlyHll,
+      "hll_day" -> Rollup.dailyHll, "kll" -> Rollup.hourlyKll,
+      "theta" -> Rollup.segmentTheta, "cms" -> Rollup.langCms).foreach {
+      case (name, r) => replayCheck(s"$base/$name")(
+        StreamPipeline.applyRollupBatch(_, s"$base/$name", _, r))
+    }
+    replayCheck(s"$base/grain/minute")(
+      StreamPipeline.applyGrainRollupBatch(_, s"$base/grain", _))
+    replayCheck(s"$base/funnel")(
+      StreamPipeline.applyFunnelBatch(_, s"$base/funnel", _))
+    // exactly once: each event counted once across the two batch ids
+    Seq("agg", "grain/minute").foreach(t =>
+      assert(spark.read.parquet(s"$base/$t").agg(sum("n_events"))
+        .collect()(0).getLong(0) == 36L, t))
+    assert(spark.read.parquet(s"$base/kll")
+      .agg(sum(expr("kll_sketch_get_n_double(sk)"))).collect()(0)
+      .getLong(0) == 36L)
+    // the keyed upsert has no per-batch entry point: replay it the way
+    // the engine does, by restarting its query after dropping the last
+    // commit-log entry (the offset log keeps the batch's files)
+    val up = s"$base/upsert"
+    val in = new java.io.File(s"$base/upsert_in")
+    val ckpt = s"$base/upsert_ckpt"
+    in.mkdirs()
+    def put(name: String, rows: (Long, Long, String)*): Unit =
+      Files.write(new java.io.File(in, name).toPath, rows.map {
+        case (k, v, p) => s"""{"k":$k,"ver":$v,"payload":"$p"}"""
+      }.mkString("\n").getBytes("UTF-8"))
+    def drain(): Unit = {
+      val q = StreamPipeline.startMergeSink(
+        spark.readStream.schema("k LONG, ver LONG, payload STRING")
+          .json(in.toString), up, ckpt, keys = Seq("k"), orderCol = "ver")
+      try q.processAllAvailable() finally q.stop()
+    }
+    put("0.json", (1L, 1L, "a"), (1L, 2L, "b"), (2L, 1L, "c"))
+    drain()
+    val u0 = snapshot(up)
+    val commit0 = new java.io.File(s"$ckpt/commits/0")
+    assert(commit0.delete())
+    new java.io.File(s"$ckpt/commits/.0.crc").delete()
+    drain()
+    assert(commit0.exists(), "the restarted query must re-run batch 0")
+    assert(snapshot(up) === u0, "a replayed batchId moved the upsert table")
+    assert(TableSink.listVersions(spark, up) === Seq(0L))
+    put("1.json", (2L, 5L, "d"), (3L, 1L, "e"))
+    drain()
+    assert(snapshot(up) !== u0)
+    assert(TableSink.listVersions(spark, up) === Seq(0L, 1L))
   }
 
   test("KLL quantile sketch sink: uneven batch slicing converges in the " +
@@ -224,7 +277,7 @@ class AtomicCommitSpec extends AnyFunSuite {
       all.exceptAll(all.limit(7)).exceptAll(
         all.exceptAll(all.limit(7)).limit(38)))
     slices.zipWithIndex.foreach { case (b, i) =>
-      StreamPipeline.applyQuantileSketchBatch(b, base, i.toLong)
+      StreamPipeline.applyRollupBatch(b, base, i.toLong, Rollup.hourlyKll)
     }
     val est = spark.read.parquet(base)
       .selectExpr("h", "kll_sketch_get_quantile_double(sk, 0.5) AS p50",
@@ -254,7 +307,7 @@ class AtomicCommitSpec extends AnyFunSuite {
     val before = spark.read.parquet(base)
       .selectExpr("h", "hex(sk) AS x").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
-    StreamPipeline.applyQuantileSketchBatch(slices.last, base, 2L)
+    StreamPipeline.applyRollupBatch(slices.last, base, 2L, Rollup.hourlyKll)
     val after = spark.read.parquet(base)
       .selectExpr("h", "hex(sk) AS x").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -272,7 +325,7 @@ class AtomicCommitSpec extends AnyFunSuite {
       all.exceptAll(all.limit(13)).exceptAll(
         all.exceptAll(all.limit(13)).limit(29)))
     slices.zipWithIndex.foreach { case (b, i) =>
-      StreamPipeline.applySegmentSketchBatch(b, base, i.toLong)
+      StreamPipeline.applyRollupBatch(b, base, i.toLong, Rollup.segmentTheta)
     }
     // per-type estimates == exact distinct (exact regime)
     val est = spark.read.parquet(base)
@@ -313,7 +366,7 @@ class AtomicCommitSpec extends AnyFunSuite {
       all.exceptAll(all.limit(9)).exceptAll(
         all.exceptAll(all.limit(9)).limit(21)))
     slices.zipWithIndex.foreach { case (b, i) =>
-      StreamPipeline.applyCmsSketchBatch(b, base, i.toLong)
+      StreamPipeline.applyRollupBatch(b, base, i.toLong, Rollup.langCms)
     }
     def hexes(df: org.apache.spark.sql.DataFrame): Map[String, String] =
       df.selectExpr("lang", "hex(cms) AS x").collect()
@@ -327,7 +380,7 @@ class AtomicCommitSpec extends AnyFunSuite {
     assert(stored.keySet == direct.keySet)
     assert(stored == direct,
       "any batch slicing must union to the direct sketch's bytes")
-    StreamPipeline.applyCmsSketchBatch(slices.last, base, 2L)
+    StreamPipeline.applyRollupBatch(slices.last, base, 2L, Rollup.langCms)
     assert(hexes(spark.read.parquet(base)) == stored,
       "replayed batch mutated the CMS table")
   }

@@ -188,26 +188,32 @@ class StreamingSpec extends AnyFunSuite {
   test("self-compacting append sink: file count stays bounded across " +
       "many micro-batches and no rows are lost or duplicated") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact-sink").toString
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)](spark)
-    val q = StreamPipeline.startCompactingSink(
-      mem.toDF().toDF("id", "payload"),
-      s"$dir/out", s"$dir/ckpt", maxFiles = 6, targetRecordsPerFile = 100)
-    try {
-      (0 until 12).foreach { b =>
-        mem.addData((0 until 5).map(i => (b * 5L + i, s"row-$b-$i")): _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val files = Option(new java.io.File(s"$dir/out").listFiles())
-      .getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
-    // 12 appends would leave ≥12 files (one per batch per partition)
-    // without compaction; the sink must keep folding them back down
-    assert(files <= 8, s"compaction did not bound file count: $files")
-    val out = spark.read.parquet(s"$dir/out")
-    assert(out.count() === 60)
-    assert(out.select("id").distinct().count() === 60)
+    val base = java.nio.file.Files.createTempDirectory("compact-sink").toString
+    // the plain local path and its file: URI form must both compact
+    Seq("plain", "uri").foreach { form =>
+      val dir = new java.io.File(base, form)
+      val local = new java.io.File(dir, "out")
+      val out = if (form == "uri") local.toURI.toString else local.toString
+      val mem = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, String)](spark)
+      val q = StreamPipeline.startCompactingSink(
+        mem.toDF().toDF("id", "payload"),
+        out, s"$dir/ckpt", maxFiles = 6, targetRecordsPerFile = 100)
+      try {
+        (0 until 12).foreach { b =>
+          mem.addData((0 until 5).map(i => (b * 5L + i, s"row-$b-$i")): _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      val files = Option(local.listFiles())
+        .getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
+      // 12 appends would leave ≥12 files (one per batch per partition)
+      // without compaction; the sink must keep folding them back down
+      assert(files <= 8, s"$out: compaction did not bound file count: $files")
+      val rows = spark.read.parquet(out)
+      assert(rows.count() === 60)
+      assert(rows.select("id").distinct().count() === 60)
+    }
   }
 
   test("runAvailableNow: drains what exists, stops, and a second run is " +
